@@ -14,8 +14,10 @@ Reference parity map (file:line cites into /root/reference):
                                   core/gzipfile_handler.py:30-114
       -> size-targeted part files via ``maxRecordsPerFile`` computed
          from sampled record size (and sampled gzip ratio when
-         compressing); time rotation is the streaming trigger
-         (lakeflush_spark.streaming)
+         compressing): a driver-side head sample of the first source
+         file for opaque and all-string CSV lakes, a sampling job over
+         the parsed rows for typed schemas; time rotation is the
+         streaming trigger (lakeflush_spark.streaming)
 - O10 bundle naming/commit        core/collector.py:82-91
       -> Spark's file committer (task temp file -> atomic rename);
          bundle identity lives in the audit table, not the filename
@@ -28,16 +30,19 @@ Reference parity map (file:line cites into /root/reference):
 - O15 flush audit sidecar         utils/file/store.py:10-21
       -> one row per bundle appended to a queryable parquet audit table
 - O19 error-skip                  collectors/local_lake.py:69-72
-      -> ``ignoreCorruptFiles`` / ``ignoreMissingFiles`` options
+      -> ``ignoreCorruptFiles`` / ``ignoreMissingFiles`` per-read
+         options (never the caller's session conf)
 
 Scale stance: listing, reading and writing all distribute; the only
-driver-side work is sampling a few KB of records to size the bundles.
+driver-side work is sizing the bundles from a small sample: the head
+of one source file (at most 256 KB) or a few hundred parsed records.
 At 100 TB with 128 MB bundles this plans ~800k write tasks — the
 repartition count is derived from data size, never hardcoded.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import gzip as _gzip
 import math
 import uuid
@@ -46,6 +51,7 @@ from dataclasses import dataclass, field, replace
 import pyspark.sql.functions as F
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType
 
 from lakeflush_spark.io import hadoop_fs, local_path
 from lakeflush_spark.operators.manifest import scan_manifest
@@ -95,7 +101,9 @@ class CompactionConfig:
     schema: object | None = None  # optional explicit schema for parsed mode
     csv_header: bool = True  # reference csv_header flag
     ignore_corrupt_files: bool = True  # O19 error-skip semantics
-    sample_records: int = 512  # records sampled to estimate bundle sizing
+    #: records sampled to size the bundles of typed parsed sources
+    #: (opaque and all-string CSV sources size from a head sample)
+    sample_records: int = 512
     #: sampled-text-bytes -> columnar-bytes ratio used to size
     #: parquet/orc bundles (encoding+compression shrinks rows vs their
     #: JSON text; 1.0 = strict under-cap, raise for denser packing)
@@ -166,26 +174,22 @@ def partition_columns(fmt: str) -> list[tuple[str, str]]:
     return cols
 
 
-def _estimate_record_bytes(df: DataFrame, text_col: str, n: int) -> float:
-    """Average serialized record size (+1 for the newline terminator —
-    same accounting as the reference's pre-write size check,
-    core/file_handler.py:52-57)."""
-    sample = df.select((F.length(text_col) + 1).alias("b")).limit(n).agg(F.avg("b")).collect()
-    avg = sample[0][0]
-    return float(avg) if avg else 1.0
-
-
-def _estimate_gzip_ratio(df: DataFrame, text_col: str, n: int) -> float:
-    """Sampled compression ratio (raw/compressed), driver-side on a few
-    hundred records. The reference checks the on-disk compressed size
-    every 100 KB instead (gzipfile_handler.py:52,66-69); sampling keeps
-    the job single-pass."""
-    rows = df.select(text_col).limit(n).collect()
-    raw = ("\n".join(r[0] for r in rows if r[0] is not None) + "\n").encode()
-    if not raw:
-        return 1.0
-    comp = _gzip.compress(raw, compresslevel=6)
-    return max(1.0, len(raw) / max(1, len(comp)))
+def _sampled_size_estimates(text: DataFrame, n: int, compress: bool) -> tuple[float, float]:
+    """(avg_record_bytes, gzip_ratio) from the first ``n`` serialized
+    records of a parsed source, taken in one pass (the take scans only
+    the partitions it needs) for both estimates. Record bytes count the
+    newline terminator, the same accounting as the reference's
+    pre-write size check (core/file_handler.py:52-57). The reference
+    checks the on-disk compressed size every 100 KB instead
+    (gzipfile_handler.py:52,66-69); sampling keeps the write one pass."""
+    rows = [r[0] for r in text.limit(n).collect() if r[0] is not None]
+    if not rows:
+        return 1.0, 1.0
+    raw = ("\n".join(rows) + "\n").encode()
+    ratio = 1.0
+    if compress:
+        ratio = max(1.0, len(raw) / max(1, len(_gzip.compress(raw, compresslevel=6))))
+    return len(raw) / len(rows), ratio
 
 
 def _sample_source_head(spark: SparkSession, first_file: str, max_bytes: int = 262144) -> bytes:
@@ -239,24 +243,28 @@ def _opaque_size_estimates(
 
 
 def _as_text(df: DataFrame, fmt: str) -> DataFrame:
-    """Serialize a parsed DataFrame to one text column for size math."""
+    """Serialize a parsed DataFrame to one text column for size math,
+    the way the bundle writer renders it: a plain string cast would
+    under-count values the writers print longer (a timestamp casts to
+    19 characters but the CSV writer prints 24)."""
+    row = F.struct(*df.columns)
     if fmt == "csv":
-        return df.select(
-            F.concat_ws(",", *[F.col(c).cast("string") for c in df.columns]).alias("value")
-        )
-    return df.select(F.to_json(F.struct(*df.columns)).alias("value"))
+        return df.select(F.to_csv(row).alias("value"))
+    return df.select(F.to_json(row, JSON_TS_OPTIONS).alias("value"))
 
 
 def _first_source_file(spark: SparkSession, cfg: CompactionConfig) -> str | None:
-    """First non-hidden, non-empty file under the source root (lazy
-    listFiles walk — stops at the first hit). Spark Connect: a
-    metadata-only manifest aggregate instead (Spark's file index prunes
-    hidden ``_``/``.`` names itself, matching the walk's filter)."""
+    """First non-hidden, non-empty file under the source root whose
+    name matches ``cfg.match_patterns`` (lazy listFiles walk — stops at
+    the first hit). Spark Connect: a metadata-only manifest aggregate
+    instead (Spark's file index prunes hidden ``_``/``.`` names itself,
+    matching the walk's filter)."""
+    patterns = [p for p in cfg.match_patterns if p]
     h = hadoop_fs(spark, cfg.source_dir)
     if h is None:
         try:
             row = (
-                scan_manifest(spark, cfg.source_dir)
+                scan_manifest(spark, cfg.source_dir, patterns)
                 .where(F.col("size") > 0)
                 .agg(F.min("file_path"))
                 .collect()[0]
@@ -271,7 +279,11 @@ def _first_source_file(spark: SparkSession, cfg: CompactionConfig) -> str | None
     while it.hasNext():
         st = it.next()
         name = st.getPath().getName()
-        if not name.startswith(("_", ".")) and st.getLen() > 0:
+        if (
+            not name.startswith(("_", "."))
+            and st.getLen() > 0
+            and (not patterns or any(fnmatch.fnmatchcase(name, p) for p in patterns))
+        ):
             return st.getPath().toString()
     return None
 
@@ -321,6 +333,21 @@ def _source_stats(spark: SparkSession, cfg: CompactionConfig, need_first: bool =
     return int(stats["files"]), int(stats["bytes"]), stats["first_file"]
 
 
+def _reader(spark: SparkSession, cfg: CompactionConfig):
+    """Recursive source reader with a single match pattern pushed into
+    the listing and the O19 error-skip policy as per-read options, so
+    the caller's session conf stays untouched."""
+    reader = (
+        spark.read.option("recursiveFileLookup", "true")
+        .option("ignoreCorruptFiles", str(cfg.ignore_corrupt_files).lower())
+        .option("ignoreMissingFiles", "true")
+    )
+    patterns = [p for p in cfg.match_patterns if p]
+    if len(patterns) == 1:
+        reader = reader.option("pathGlobFilter", patterns[0])
+    return reader
+
+
 def read_source(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
     """Read the small-file lake.
 
@@ -328,8 +355,6 @@ def read_source(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
     whole-file-as-record for JSON (O4), line-records for text. Parsed
     mode: schema-on-read via the native json/csv readers.
     """
-    spark.conf.set("spark.sql.files.ignoreCorruptFiles", str(cfg.ignore_corrupt_files).lower())
-    spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
     patterns = [p for p in cfg.match_patterns if p]
     glob = patterns[0] if len(patterns) == 1 else None
 
@@ -349,21 +374,14 @@ def read_source(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
                 skip_corrupt=cfg.ignore_corrupt_files,
             )
         if cfg.file_format == "json":
-            reader = spark.read.option("recursiveFileLookup", "true")
+            reader = _reader(spark, cfg)
             for k, v in JSON_TS_OPTIONS.items():
                 reader = reader.option(k, v)
-            if glob:
-                reader = reader.option("pathGlobFilter", glob)
             if cfg.schema is not None:
                 reader = reader.schema(cfg.schema)
             return reader.json(cfg.source_dir)
         if cfg.file_format == "csv":
-            reader = (
-                spark.read.option("recursiveFileLookup", "true")
-                .option("header", str(cfg.csv_header).lower())
-            )
-            if glob:
-                reader = reader.option("pathGlobFilter", glob)
+            reader = _reader(spark, cfg).option("header", str(cfg.csv_header).lower())
             if cfg.schema is not None:
                 reader = reader.schema(cfg.schema)
             return reader.csv(cfg.source_dir)
@@ -372,9 +390,7 @@ def read_source(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
             # writers). Schema comes from the footers; tiny files pack
             # densely into scan partitions via openCostInBytes.
             spark.conf.set("spark.sql.files.openCostInBytes", str(64 * 1024))
-            reader = spark.read.option("recursiveFileLookup", "true")
-            if glob:
-                reader = reader.option("pathGlobFilter", glob)
+            reader = _reader(spark, cfg)
             if cfg.schema is not None:
                 reader = reader.schema(cfg.schema)
             return getattr(reader, cfg.file_format)(cfg.source_dir)
@@ -384,11 +400,8 @@ def read_source(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
     # partitions — the default 4 MB openCostInBytes would plan one
     # near-empty task per handful of files.
     spark.conf.set("spark.sql.files.openCostInBytes", str(64 * 1024))
-    reader = spark.read.option("recursiveFileLookup", "true")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
     wholetext = cfg.whole_file_records  # O4 strict whole-file-record mode
-    return reader.option("wholetext", str(wholetext).lower()).text(cfg.source_dir)
+    return _reader(spark, cfg).option("wholetext", str(wholetext).lower()).text(cfg.source_dir)
 
 
 def _opaque_binary_raw(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
@@ -401,11 +414,8 @@ def _opaque_binary_raw(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
     write will use, instead of re-walking the lake.
     """
     spark.conf.set("spark.sql.files.openCostInBytes", str(64 * 1024))
-    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
+    df = _reader(spark, cfg).format("binaryFile").load(cfg.source_dir)
     patterns = [p for p in cfg.match_patterns if p]
-    if len(patterns) == 1:
-        reader = reader.option("pathGlobFilter", patterns[0])
-    df = reader.load(cfg.source_dir)
     if len(patterns) > 1:
         cond = None
         for p in patterns:
@@ -433,26 +443,24 @@ def _binary_values(df: DataFrame) -> DataFrame:
     )
 
 
-def _read_opaque_binary(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
-    """Tiny-file fast path: whole files via the binaryFile source.
-
-    For lakes of many small files the per-file overhead of the line
-    reader dominates (~5x slower measured at 20k files); binaryFile
-    reads each file as one row.
-    """
-    return _binary_values(_opaque_binary_raw(spark, cfg))
-
-
 def compact(spark: SparkSession, cfg: CompactionConfig) -> CompactionResult:
     """Run the full collect→bundle→flush pipeline as one batch job.
 
-    Job structure (local AND cluster): 1 listing aggregate over the
-    manifest, an O(1) driver-side head sample for sizing (opaque mode),
-    then ONE fused read→coalesce→write stage, then the audit append.
-    No shuffle anywhere: coalesce() narrows partitions without moving
-    rows, and ``maxRecordsPerFile`` rolls bundles inside each task the
-    way the reference's rotation check does per-record
-    (core/file_handler.py:52-57) — just vectorized and parallel.
+    Job structure (local AND cluster):
+
+    1. source stats: a metadata-only binaryFile aggregate in opaque
+       mode (no file opens), else Hadoop's ``getContentSummary`` — or
+       the manifest aggregate when match patterns are set;
+    2. bundle sizing: a driver-side head sample of the first source
+       file for opaque and all-string CSV sources (no Spark job), one
+       sampling job over the parsed rows for typed schemas;
+    3. the read→write job. Small inputs ``repartition(n_bundles)`` —
+       a trivial shuffle that keeps the read of thousands of tiny files
+       parallel; big inputs write straight from the scan partitions
+       with no shuffle. Either way ``maxRecordsPerFile`` rolls bundles
+       inside each task the way the reference's rotation check does
+       per record (core/file_handler.py:52-57);
+    4. the audit append.
     """
     target_bytes = int(cfg.max_size_mb * 1024 * 1024)
     # avro counts as columnar-ish: container files must be PARSED and
@@ -527,21 +535,31 @@ def compact(spark: SparkSession, cfg: CompactionConfig) -> CompactionResult:
     if use_binary:
         avg_rec = max(1.0, avg_file)  # record = file; exact from stats
         ratio = _opaque_size_estimates(spark, first_file, True)[1] if cfg.compress else 1.0
-    elif opaque:
+    elif opaque or (
+        cfg.file_format == out_fmt == "csv"
+        and all(isinstance(f.dataType, StringType) for f in df.schema.fields)
+    ):
+        # All-string CSV (the collector's csv_header path) writes every
+        # value back as its source text, so the head sample sizes it
+        # without a sampling job. Typed values can print longer than
+        # their source text (timestamps) and keep the job below.
+        first_file = first_file or _first_source_file(spark, cfg)
+        if first_file is None:
+            return empty
         avg_rec, ratio = _opaque_size_estimates(spark, first_file, cfg.compress)
     else:
-        text_probe = _as_text(df, cfg.file_format)
-        avg_rec = _estimate_record_bytes(text_probe, "value", cfg.sample_records)
-        if out_fmt in ("parquet", "orc"):
+        columnar_out = out_fmt in ("parquet", "orc")
+        avg_rec, ratio = _sampled_size_estimates(
+            _as_text(df, cfg.file_format if columnar_out else out_fmt),
+            cfg.sample_records,
+            cfg.compress and not columnar_out,
+        )
+        if columnar_out:
             # Columnar bundles: text bytes upper-bound the encoded size;
             # columnar_ratio densifies when the caller knows better.
             ratio = max(0.01, cfg.columnar_ratio)
-        else:
-            ratio = (
-                _estimate_gzip_ratio(text_probe, "value", cfg.sample_records)
-                if cfg.compress
-                else 1.0
-            )
+    if out_fmt == "csv" and cfg.csv_header and not opaque:
+        target_bytes -= len(",".join(df.columns)) + 1  # each bundle's header line
     records_per_bundle = max(1, int(target_bytes * ratio / avg_rec))
     est_total_records = max(1, int(total_bytes / avg_rec))
     n_bundles = max(1, math.ceil(est_total_records / records_per_bundle))

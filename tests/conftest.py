@@ -24,3 +24,23 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_medium_dir():
     return SF_MEDIUM
+
+
+@pytest.fixture
+def job_stages(spark):
+    """``job_stages(group)`` -> {job id: [task count of each stage]} for
+    the Spark jobs run under job group ``group`` (a streaming query runs
+    its jobs under the group ``str(query.runId)``), read from the status
+    tracker once the listener bus has delivered their events."""
+    sc = spark.sparkContext
+
+    def read(group: str) -> dict:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        out = {}
+        for job in tracker.getJobIdsForGroup(group):
+            stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
+            out[job] = [s.numTasks for s in stages if s is not None]
+        return out
+
+    return read

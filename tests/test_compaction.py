@@ -9,6 +9,7 @@ guidance.
 import glob
 import gzip
 import os
+from dataclasses import replace
 
 import pyspark.sql.functions as F
 import pytest
@@ -604,3 +605,151 @@ def test_compact_audit_raises_on_failed_rename(spark, sf_dir, tmp_path, monkeypa
     monkeypatch.setattr(comp, "hadoop_fs", lambda *_: fake2)
     with pytest.raises(RuntimeError, match="repair manually"):
         comp._recover_audit_swap(spark, f"{dest}/_lakeflush_audit")
+
+
+def _stray_files_listed_first(lake, keep: str) -> None:
+    """Add non-matching, non-empty files to ``lake`` until the directory
+    listing (the order a Hadoop ``listFiles`` walk follows) yields one
+    of them before ``keep``."""
+    i = 0
+    while i == 0 or os.listdir(lake)[0] == keep:
+        (lake / f"README{i}").write_text("this lake holds csv files\n")
+        i += 1
+
+
+def test_first_source_file_honours_match_patterns(spark, tmp_path, monkeypatch):
+    import lakeflush_spark.operators.compaction as comp
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    (lake / "data.csv").write_text("a,b\n1,2\n")
+    _stray_files_listed_first(lake, "data.csv")
+    cfg = CompactionConfig(
+        source_dir=str(lake), dest_dir="", file_format="csv", match_patterns=["*.csv"]
+    )
+    no_match = replace(cfg, match_patterns=["*.tsv"])
+    assert comp._first_source_file(spark, cfg).endswith("/data.csv")
+    assert comp._first_source_file(spark, no_match) is None
+    # Spark Connect fallback (no JVM bridge): the manifest aggregate
+    monkeypatch.setattr(comp, "hadoop_fs", lambda *_: None)
+    assert comp._first_source_file(spark, cfg).endswith("/data.csv")
+    assert comp._first_source_file(spark, no_match) is None
+
+
+def test_csv_header_collector_ignores_non_matching_files(spark, tmp_path):
+    # the header schema and the head-sample sizing must come from a
+    # file the patterns select, not a stray README in the lake root
+    from lakeflush_spark.compat import FileType, LocalLakeCollector
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    rows = [f"{i},name{i}" for i in range(30)]
+    for f in range(3):
+        (lake / f"part{f}.csv").write_text("id,name\n" + "\n".join(rows[f::3]) + "\n")
+    _stray_files_listed_first(lake, "part0.csv")
+    out = tmp_path / "out"
+    out.mkdir()
+    bundles = LocalLakeCollector(
+        str(lake), file_type=FileType.CSV, match_patterns=["*.csv"], csv_header=True,
+        filepath=str(out), filename="b",
+    ).start()
+    lines = [ln.rstrip("\n") for b in bundles for ln in open(b)]
+    assert lines.count("id,name") == len(bundles) == 1
+    assert sorted(lines[1:]) == sorted(rows)
+
+
+def test_compact_leaves_session_error_policy_alone(spark, small_json_lake, tmp_path):
+    # O19's skip policy rides each read as options: a compaction must not
+    # make every later read in the caller's session skip bad files
+    lake, _ = small_json_lake
+    keys = ("spark.sql.files.ignoreCorruptFiles", "spark.sql.files.ignoreMissingFiles")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "false")
+        for parsed in (False, True):
+            compact(
+                spark,
+                CompactionConfig(
+                    source_dir=lake, dest_dir=str(tmp_path / f"out{parsed}"),
+                    file_format="json", parsed=parsed,
+                ),
+            )
+        assert {k: spark.conf.get(k) for k in keys} == dict.fromkeys(keys, "false")
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("record_bytes", [200, 40_000])
+def test_compact_skips_files_that_vanish_after_listing(
+    spark, tmp_path, monkeypatch, record_bytes
+):
+    # O19 on both opaque readers: 200 B files take the binaryFile path,
+    # 40 KB files the line reader. A file deleted between the listing
+    # and the write is skipped, not fatal, whatever the session conf says.
+    import lakeflush_spark.operators.compaction as comp
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    records = {f"f{i}.json": '{"v": "%s"}' % (str(i) * record_bytes) for i in range(4)}
+    for name, rec in records.items():
+        (lake / name).write_text(rec + "\n")
+    list_bundles = comp._list_bundles
+
+    def vanish_then_list(spark_, dest):
+        (lake / "f0.json").unlink(missing_ok=True)  # after the source listing
+        return list_bundles(spark_, dest)
+
+    monkeypatch.setattr(comp, "_list_bundles", vanish_then_list)
+    saved = spark.conf.get("spark.sql.files.ignoreMissingFiles")
+    spark.conf.set("spark.sql.files.ignoreMissingFiles", "false")
+    try:
+        res = compact(
+            spark,
+            CompactionConfig(source_dir=str(lake), dest_dir=str(tmp_path / "out")),
+        )
+    finally:
+        spark.conf.set("spark.sql.files.ignoreMissingFiles", saved)
+    assert res.source_files == 4
+    got = sorted(
+        ln.rstrip("\n") for b in res.bundles for ln in open(b.removeprefix("file:"))
+    )
+    assert got == sorted(rec for name, rec in records.items() if name != "f0.json")
+
+
+def test_compact_typed_csv_samples_rows_and_holds_cap(spark, tmp_path, monkeypatch):
+    # Typed values re-serialize longer than their source text: a
+    # "2024-01-05" timestamp is written as "2024-01-05T00:00:00.000Z".
+    # A head sample of the source would undersize every record, so typed
+    # schemas keep the sampling job, and every bundle stays under the cap
+    # (header line included: 676 rows of 31 bytes leave 15 bytes of a
+    # 0.02 MiB cap, less than the 34-byte header).
+    import lakeflush_spark.operators.compaction as comp
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    header = "record_identifier,event_timestamp"
+    schema = "record_identifier INT, event_timestamp TIMESTAMP"
+    for f in range(4):
+        rows = [f"{10000 + f * 1000 + i},2024-01-{i % 28 + 1:02d}" for i in range(1000)]
+        (lake / f"part{f}.csv").write_text(header + "\n" + "\n".join(rows) + "\n")
+    calls = []
+    sampled = comp._sampled_size_estimates
+    monkeypatch.setattr(
+        comp, "_sampled_size_estimates", lambda *a: calls.append(a) or sampled(*a)
+    )
+    cap_mb = 0.02
+    res = compact(
+        spark,
+        CompactionConfig(
+            source_dir=str(lake), dest_dir=str(tmp_path / "out"), file_format="csv",
+            parsed=True, schema=schema, max_size_mb=cap_mb,
+        ),
+    )
+    assert len(calls) == 1
+    sizes = [os.path.getsize(b.removeprefix("file:")) for b in res.bundles]
+    assert len(sizes) > 3, sizes
+    assert max(sizes) <= cap_mb * 1024 * 1024, sizes
+    back = read_bundles(spark, str(tmp_path / "out"), "csv", schema=schema)
+    assert back.count() == 4000

@@ -387,3 +387,31 @@ def test_csv_reader_empty_first_file_does_not_eat_next_header(tmp_path):
     assert r.header_data == "col1,col2"
     # O6 header dedup still holds for the third file
     assert list(r.read(str(again))) == ["3,4"]
+
+
+def test_csv_header_collector_runs_three_jobs(spark, tmp_path, job_stages):
+    """An all-string CSV pass sizes its bundles from the header sample
+    the collector already reads: the write (which adaptive execution
+    runs as a shuffle-map job and a result job) and the audit append
+    are its only Spark jobs."""
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    for f in range(8):
+        (lake / f"p{f}.csv").write_text(
+            "id,name\n" + "".join(f"{f * 100 + i},n{i}\n" for i in range(100))
+        )
+    for compress in (False, True):
+        out = tmp_path / f"out{compress}"
+        out.mkdir()
+        sc = spark.sparkContext
+        group = f"csv-collector-{compress}"
+        sc.setJobGroup(group, "csv collector pass")
+        try:
+            bundles = LocalLakeCollector(
+                str(lake), file_type=FileType.CSV, csv_header=True,
+                filepath=str(out), filename="b", compress=compress,
+            ).start()
+        finally:
+            sc._jsc.clearJobGroup()
+        assert len(bundles) == 1
+        assert len(job_stages(group)) == 3

@@ -476,6 +476,38 @@ def test_stream_compaction_ignores_stray_files(spark, small_lake, tmp_path):
     compact_stream(spark, cfg, available_now=True).awaitTermination(180)
 
 
+def test_stream_compaction_lists_one_task_per_core(spark, tmp_path, job_stages):
+    """A micro-batch of 64 new files roots its read at 64 paths, above
+    Spark's 32-path threshold for a distributed listing job. That job
+    must run one task per core, not one per file: each task costs
+    ~10 ms of CPU to deserialize a Hadoop Configuration."""
+    src = tmp_path / "src"
+    src.mkdir()
+    # equal-size files keep the scan's bin-packing at <= one split per core
+    records = [f'{{"f": {i:03d}, "r": 0}}' for i in range(64)]
+    for i, rec in enumerate(records):
+        (src / f"f{i:03d}.json").write_text(rec + "\n")
+    dest = str(tmp_path / "dest")
+    cfg = StreamCompactionConfig(
+        source_dir=str(src),
+        dest_dir=dest,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        exactly_once=True,
+    )
+    q = compact_stream(spark, cfg, available_now=True)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 1
+    jobs = job_stages(str(q.runId))
+    assert jobs, "the 64-path listing runs as a Spark job in the query's group"
+    cores = spark.sparkContext.defaultParallelism
+    assert all(n <= cores for tasks in jobs.values() for n in tasks), jobs
+    got = sorted(
+        ln.rstrip("\n") for p in _bundles(dest) for ln in open(p) if ln.strip()
+    )
+    assert got == records
+
+
 def _stream_events(spark, sf_dir):
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from lakeflush_spark.io import table_path

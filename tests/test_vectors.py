@@ -294,7 +294,10 @@ def test_jl_projection_matches_numpy_and_preserves_distances(spark):
     }
     S = np.asarray(signs)  # (16, 64)
     X = np.asarray(vecs)
-    want = X @ S.T
+    # Sequential left fold of the products. Not ``X @ S.T``: OpenBLAS
+    # picks its dgemm kernel per CPU, and its AVX-512 kernel sums in a
+    # different order, so the BLAS result is not bit-stable across hosts.
+    want = np.add.accumulate(X[:, None, :] * S[None, :, :], axis=-1)[..., -1]
     for i in range(len(vecs)):
         assert np.array_equal(got[i], want[i]), i
     # JL distance preservation: median pairwise distortion small
