@@ -64,11 +64,6 @@ def _fixup(spark: SparkSession, name: str, df: DataFrame) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every testdata table as a DataFrame keyed by name."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def spread_for_compute(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Ensure a compute-bound map stage uses the whole cluster.
 
@@ -132,35 +127,120 @@ def local_path(path_str: str) -> str | None:
     return rest or "/"
 
 
-#: shared long-lived pool for overlapping independent eager Spark jobs
-#: (guide §2.6 — checkpoint builds, store writes). MODULE-LEVEL on
-#: purpose: in py4j pinned-thread mode every Python thread owns a
-#: dedicated JVM thread that outlives it unless explicitly cleaned
+#: the shared pool behind :func:`overlap`. MODULE-LEVEL on purpose: in
+#: py4j pinned-thread mode every Python thread owns a dedicated JVM
+#: thread that outlives it unless explicitly cleaned
 #: (pyspark.InheritableThread's reason to exist) — a per-call pool
-#: leaks JVM threads at every use and measurably degrades a long
-#: bench run (the q55 pool note, r14).
-_EAGER_POOL: list = []
-#: creation guard (r15, ADVICE r14): two threads — e.g. two concurrent
-#: foreachBatch streams — could both see the empty list and build two
-#: executors; the loser's pool (and its py4j-pinned JVM threads) leaks.
-_EAGER_POOL_LOCK = threading.Lock()
+#: leaks JVM threads at every use and measurably degrades a long run.
+#: Creation is lock-guarded: two concurrent callers (e.g. two
+#: foreachBatch streams) could otherwise both build one and leak the
+#: loser's threads.
+_POOL: list = []
+_POOL_LOCK = threading.Lock()
+#: ``in_pool`` is True while a thread runs a pooled :func:`overlap` leg
+_WORKER = threading.local()
 
 
-def eager_pool():
-    """The shared eager-job pool (8 workers: enough to overlap every
-    independent job a caller submits, few enough that FIFO scheduling
-    keeps the first job's stages at full width)."""
-    if not _EAGER_POOL:
+def _eager_pool():
+    """8 workers: enough to keep every independent leg a caller passes
+    in flight, few enough that FIFO scheduling keeps the first job's
+    stages at full width."""
+    if not _POOL:
         from concurrent.futures import ThreadPoolExecutor
 
-        with _EAGER_POOL_LOCK:
-            if not _EAGER_POOL:
-                _EAGER_POOL.append(
+        with _POOL_LOCK:
+            if not _POOL:
+                _POOL.append(
                     ThreadPoolExecutor(
                         max_workers=8, thread_name_prefix="eager-pool"
                     )
                 )
-    return _EAGER_POOL[0]
+    return _POOL[0]
+
+
+def _settled(thunk):
+    """A finished Future holding ``thunk()``'s result or exception."""
+    from concurrent.futures import Future
+
+    fut: Future = Future()
+    try:
+        fut.set_result(thunk())
+    except Exception as e:
+        fut.set_exception(e)
+    return fut
+
+
+def _as_worker(thunk):
+    """Run a pooled leg with the pool-worker flag set (see overlap)."""
+    _WORKER.in_pool = True
+    try:
+        return thunk()
+    finally:
+        _WORKER.in_pool = False
+
+
+def _carry_properties(thunks):
+    """``thunks`` wrapped to run with the calling thread's Spark local
+    properties (``spark.job.description``, job group, scheduler pool)
+    and session tags; unchanged when no session is active. Each thunk
+    gets its own snapshot: the wrapper installs the snapshot object
+    itself as the worker's properties, so a shared one would let
+    concurrent legs overwrite each other's SQL execution id."""
+    from pyspark.sql import SparkSession
+    from pyspark.util import inheritable_thread_target
+
+    session = SparkSession.getActiveSession() if thunks else None
+    if session is None:
+        return list(thunks)
+    return [inheritable_thread_target(session)(t) for t in thunks]
+
+
+def overlap(*thunks) -> list:
+    """Run independent zero-argument callables concurrently and return
+    their results in argument order.
+
+    Spark runs several jobs at once; eager steps (checkpoint builds,
+    store writes, index searches) are only sequential because the
+    driver calls them one after another. Every thunk but the last goes
+    to one shared pool; the last runs inline on the caller's thread.
+
+    - **Drain before raise.** Every pooled leg is waited for — even
+      when the inline leg fails — before anything propagates; then the
+      first failure in ARGUMENT order is raised. A stream batch that
+      fails therefore never leaves an orphaned overwrite racing its
+      replay, and a memo build never leaves background writers behind.
+    - **Caller's job properties.** Pooled legs run with the caller's
+      Spark local properties and session tags
+      (``pyspark.util.inheritable_thread_target``), so their jobs carry
+      the caller's ``spark.job.description`` and job group.
+    - **No nested deadlock.** Called from inside a pooled leg, every
+      thunk runs inline, in order (same drain-then-raise contract): a
+      leg that submitted to the pool and waited could otherwise
+      exhaust the workers and wait on itself.
+
+    Concurrency contract: query builders assume ONE builder runs at a
+    time per process. Legs may call module-level check-then-append
+    memos whose worst case under concurrency is a double build of a
+    pure, idempotent Column tree — wasted work, never a wrong value.
+    Drivers that run two builders concurrently serialize the build
+    calls themselves.
+    """
+    if not thunks:
+        return []
+    if getattr(_WORKER, "in_pool", False):
+        futures = [_settled(t) for t in thunks]
+    else:
+        from concurrent.futures import wait
+
+        pooled = [
+            _eager_pool().submit(_as_worker, t)
+            for t in _carry_properties(thunks[:-1])
+        ]
+        try:
+            futures = pooled + [_settled(thunks[-1])]
+        finally:
+            wait(pooled)
+    return [f.result() for f in futures]
 
 
 def local_rows_df(

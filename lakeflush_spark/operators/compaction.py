@@ -42,7 +42,6 @@ repartition count is derived from data size, never hardcoded.
 
 from __future__ import annotations
 
-import fnmatch
 import gzip as _gzip
 import math
 import uuid
@@ -54,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType
 
 from lakeflush_spark.io import hadoop_fs, local_path
-from lakeflush_spark.operators.manifest import scan_manifest
+from lakeflush_spark.operators.manifest import name_glob, scan_manifest
 
 _AUDIT_DIRNAME = "_lakeflush_audit"
 
@@ -256,15 +255,15 @@ def _as_text(df: DataFrame, fmt: str) -> DataFrame:
 def _first_source_file(spark: SparkSession, cfg: CompactionConfig) -> str | None:
     """First non-hidden, non-empty file under the source root whose
     name matches ``cfg.match_patterns`` (lazy listFiles walk — stops at
-    the first hit). Spark Connect: a metadata-only manifest aggregate
-    instead (Spark's file index prunes hidden ``_``/``.`` names itself,
+    the first hit — filtered by the readers' own Hadoop ``GlobFilter``
+    string). Spark Connect: a metadata-only manifest aggregate instead
+    (Spark's file index prunes hidden ``_``/``.`` names itself,
     matching the walk's filter)."""
-    patterns = [p for p in cfg.match_patterns if p]
     h = hadoop_fs(spark, cfg.source_dir)
     if h is None:
         try:
             row = (
-                scan_manifest(spark, cfg.source_dir, patterns)
+                scan_manifest(spark, cfg.source_dir, cfg.match_patterns)
                 .where(F.col("size") > 0)
                 .agg(F.min("file_path"))
                 .collect()[0]
@@ -275,16 +274,18 @@ def _first_source_file(spark: SparkSession, cfg: CompactionConfig) -> str | None
     jvm, fs, root = h
     if not fs.exists(root):
         return None
+    glob = name_glob(cfg.match_patterns)
+    name_filter = None if glob is None else jvm.org.apache.hadoop.fs.GlobFilter(glob)
     it = fs.listFiles(root, True)
     while it.hasNext():
         st = it.next()
-        name = st.getPath().getName()
+        path = st.getPath()
         if (
-            not name.startswith(("_", "."))
+            not path.getName().startswith(("_", "."))
             and st.getLen() > 0
-            and (not patterns or any(fnmatch.fnmatchcase(name, p) for p in patterns))
+            and (name_filter is None or name_filter.accept(path))
         ):
-            return st.getPath().toString()
+            return path.toString()
     return None
 
 
@@ -300,13 +301,12 @@ def _source_stats(spark: SparkSession, cfg: CompactionConfig, need_first: bool =
     absent — we fall back to the manifest aggregate (a metadata-only
     Spark job, still never reads file bytes).
     """
-    patterns = [p for p in cfg.match_patterns if p]
     h = hadoop_fs(spark, cfg.source_dir)
     if h is not None:
         jvm, fs, root = h
         if not fs.exists(root):
             return 0, 0, None
-        if not patterns:
+        if name_glob(cfg.match_patterns) is None:
             summary = fs.getContentSummary(root)
             n_files, total = int(summary.getFileCount()), int(summary.getLength())
             if n_files == 0 or total == 0:
@@ -319,7 +319,7 @@ def _source_stats(spark: SparkSession, cfg: CompactionConfig, need_first: bool =
             return n_files, total, first_file
     try:
         stats = (
-            scan_manifest(spark, cfg.source_dir, patterns)
+            scan_manifest(spark, cfg.source_dir, cfg.match_patterns)
             .where(F.col("size") > 0)
             .agg(
                 F.count(F.lit(1)).alias("files"),
@@ -334,17 +334,17 @@ def _source_stats(spark: SparkSession, cfg: CompactionConfig, need_first: bool =
 
 
 def _reader(spark: SparkSession, cfg: CompactionConfig):
-    """Recursive source reader with a single match pattern pushed into
-    the listing and the O19 error-skip policy as per-read options, so
-    the caller's session conf stays untouched."""
+    """Recursive source reader with ``cfg.match_patterns`` pushed into
+    the listing as one glob and the O19 error-skip policy as per-read
+    options, so the caller's session conf stays untouched."""
     reader = (
         spark.read.option("recursiveFileLookup", "true")
         .option("ignoreCorruptFiles", str(cfg.ignore_corrupt_files).lower())
         .option("ignoreMissingFiles", "true")
     )
-    patterns = [p for p in cfg.match_patterns if p]
-    if len(patterns) == 1:
-        reader = reader.option("pathGlobFilter", patterns[0])
+    glob = name_glob(cfg.match_patterns)
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
     return reader
 
 
@@ -355,9 +355,6 @@ def read_source(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
     whole-file-as-record for JSON (O4), line-records for text. Parsed
     mode: schema-on-read via the native json/csv readers.
     """
-    patterns = [p for p in cfg.match_patterns if p]
-    glob = patterns[0] if len(patterns) == 1 else None
-
     if cfg.parsed or cfg.file_format in ("parquet", "orc", "avro"):
         if cfg.file_format == "avro":
             # avro -> parquet/orc bundles: the canonical row-to-columnar
@@ -370,7 +367,7 @@ def read_source(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
                 spark,
                 cfg.source_dir,
                 schema=cfg.schema,
-                glob=glob,
+                glob=name_glob(cfg.match_patterns),
                 skip_corrupt=cfg.ignore_corrupt_files,
             )
         if cfg.file_format == "json":
@@ -387,19 +384,13 @@ def read_source(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
             return reader.csv(cfg.source_dir)
         if cfg.file_format in ("parquet", "orc"):
             # Columnar small-file lake (streaming sinks, per-event
-            # writers). Schema comes from the footers; tiny files pack
-            # densely into scan partitions via openCostInBytes.
-            spark.conf.set("spark.sql.files.openCostInBytes", str(64 * 1024))
+            # writers). Schema comes from the footers.
             reader = _reader(spark, cfg)
             if cfg.schema is not None:
                 reader = reader.schema(cfg.schema)
             return getattr(reader, cfg.file_format)(cfg.source_dir)
         raise ValueError(f"parsed mode unsupported for format {cfg.file_format!r}")
 
-    # Opaque mode: pack thousands of tiny files densely into scan
-    # partitions — the default 4 MB openCostInBytes would plan one
-    # near-empty task per handful of files.
-    spark.conf.set("spark.sql.files.openCostInBytes", str(64 * 1024))
     wholetext = cfg.whole_file_records  # O4 strict whole-file-record mode
     return _reader(spark, cfg).option("wholetext", str(wholetext).lower()).text(cfg.source_dir)
 
@@ -413,17 +404,7 @@ def _opaque_binary_raw(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
     open a single file — and they REUSE the one driver-side listing the
     write will use, instead of re-walking the lake.
     """
-    spark.conf.set("spark.sql.files.openCostInBytes", str(64 * 1024))
-    df = _reader(spark, cfg).format("binaryFile").load(cfg.source_dir)
-    patterns = [p for p in cfg.match_patterns if p]
-    if len(patterns) > 1:
-        cond = None
-        for p in patterns:
-            like = p.replace("%", r"\%").replace("_", r"\_").replace("*", "%").replace("?", "_")
-            c = F.element_at(F.split(F.col("path"), "/"), -1).like(like)
-            cond = c if cond is None else (cond | c)
-        df = df.where(cond)
-    return df
+    return _reader(spark, cfg).format("binaryFile").load(cfg.source_dir)
 
 
 def _binary_values(df: DataFrame) -> DataFrame:
@@ -461,7 +442,26 @@ def compact(spark: SparkSession, cfg: CompactionConfig) -> CompactionResult:
        inside each task the way the reference's rotation check does
        per record (core/file_handler.py:52-57);
     4. the audit append.
+
+    Every job runs with a 64 KiB ``spark.sql.files.openCostInBytes``,
+    so thousands of tiny files pack densely into scan partitions (the
+    default 4 MB plans one near-empty task per handful of files). The
+    key has no per-read option: it is set on the session for the call
+    and the caller's value is restored after.
     """
+    key = "spark.sql.files.openCostInBytes"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, str(64 * 1024))
+    try:
+        return _compact(spark, cfg)
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
+def _compact(spark: SparkSession, cfg: CompactionConfig) -> CompactionResult:
     target_bytes = int(cfg.max_size_mb * 1024 * 1024)
     # avro counts as columnar-ish: container files must be PARSED and
     # re-encoded (their per-file headers/sync markers make byte-level
@@ -731,8 +731,6 @@ def _source_fingerprint(spark: SparkSession, cfg: CompactionConfig) -> str:
     """Listing fingerprint + config digest via a dedicated manifest
     scan (the non-opaque path; the opaque path folds the same terms
     into its existing stats aggregate)."""
-    from lakeflush_spark.operators.manifest import scan_manifest
-
     try:
         m = scan_manifest(spark, cfg.source_dir, cfg.match_patterns or None)
         row = m.agg(

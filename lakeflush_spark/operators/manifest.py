@@ -18,8 +18,23 @@ memory.
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+
+def name_glob(match_patterns) -> str | None:
+    """The fnmatch-style ``match_patterns`` (any-of; empty/None = match
+    all) as ONE Hadoop ``GlobFilter`` pattern on the file name — the
+    string every reader takes as ``pathGlobFilter``. Several patterns
+    become a ``{p1,p2}`` alternation; ``\\``, ``{``, ``}`` and ``,``
+    are escaped inside each pattern because fnmatch reads them
+    literally."""
+    patterns = [re.sub(r"([\\{},])", r"\\\1", p) for p in (match_patterns or []) if p]
+    if len(patterns) > 1:
+        return "{" + ",".join(patterns) + "}"
+    return patterns[0] if patterns else None
 
 
 def scan_manifest(
@@ -32,34 +47,23 @@ def scan_manifest(
 
     ``match_patterns`` are fnmatch-style globs on the file name (any-of,
     empty/None = match all — same semantics as the reference's
-    ``_should_match``). Single patterns push down into the listing via
-    ``pathGlobFilter``; multi-pattern falls back to a filter on the
-    metadata column (still listing-side, never reads file bytes).
+    ``_should_match``), pushed into the listing via ``pathGlobFilter``
+    (:func:`name_glob`).
     """
     reader = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true" if recursive else "false")
     )
-    patterns = [p for p in (match_patterns or []) if p]
-    if len(patterns) == 1:
-        reader = reader.option("pathGlobFilter", patterns[0])
-    df = reader.load(root)
+    glob = name_glob(match_patterns)
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
     # binaryFile only materializes `content` when selected — this
     # projection prunes it, so the scan is metadata-only.
-    out = df.select(
+    return reader.load(root).select(
         F.col("path").alias("file_path"),
         F.col("modificationTime").alias("mtime"),
         F.col("length").alias("size"),
     )
-    if len(patterns) > 1:
-        cond = None
-        for p in patterns:
-            # fnmatch glob -> SQL LIKE (only * and ? used by the reference)
-            like = p.replace("%", r"\%").replace("_", r"\_").replace("*", "%").replace("?", "_")
-            c = F.element_at(F.split(F.col("file_path"), "/"), -1).like(like)
-            cond = c if cond is None else (cond | c)
-        out = out.where(cond)
-    return out
 
 
 def ordered_manifest(spark: SparkSession, root: str, match_patterns=None) -> DataFrame:

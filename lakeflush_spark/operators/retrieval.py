@@ -35,6 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from lakeflush_spark.functions.text import tokens
+from lakeflush_spark.io import overlap
 from lakeflush_spark.operators.topk import grouped_top_k
 
 #: Okapi defaults (the values every major implementation ships).
@@ -322,36 +323,28 @@ def build_bm25_index(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("dl").cast("bigint").alias("total_len"),
     )
-    # r15 (guide §2.6): the stats aggregate and the postings build are
-    # INDEPENDENT jobs that both tokenize the corpus — run sequentially
-    # they cost two full scans back to back; pooled, the stats scan
-    # back-fills the postings shuffle's idle tail. The terms job stays
-    # after the barrier (it reads the persisted postings — deriving df
-    # from the PERSISTED store, not a recompute, is deliberate). Crash
-    # semantics are unchanged in kind: any partial build fails loudly
-    # at search time (bm25_search cannot open a dir missing terms/).
-    import concurrent.futures as _cf
-
-    from lakeflush_spark.io import eager_pool
-
-    _wf = eager_pool().submit(
-        lambda: stats.coalesce(1).write.mode("overwrite").parquet(
-            f"{base}/stats"
-        )
-    )
+    # the stats aggregate and the postings build are INDEPENDENT jobs
+    # that both tokenize the corpus — run sequentially they cost two
+    # full scans back to back; overlapped, the stats scan back-fills
+    # the postings shuffle's idle tail. The terms job runs after both
+    # (it reads the persisted postings — deriving df from the
+    # PERSISTED store, not a recompute, is deliberate). Any partial
+    # build fails loudly at search time (bm25_search cannot open a dir
+    # missing terms/).
     tf = (
         d.select(id_col, "dl", F.explode("_toks").alias("term"))
         .groupBy("term", id_col, "dl")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     )
     posts = tf.withColumn("_tb", _term_bucket_col(F.col("term"), n_buckets))
-    try:
-        posts.write.mode("overwrite").partitionBy("_tb").parquet(
+    overlap(
+        lambda: stats.coalesce(1).write.mode("overwrite").parquet(
+            f"{base}/stats"
+        ),
+        lambda: posts.write.mode("overwrite").partitionBy("_tb").parquet(
             f"{base}/postings"
-        )
-    finally:
-        _cf.wait([_wf])
-    _wf.result()
+        ),
+    )
     dft = (
         spark_read_back(posts.sparkSession, f"{base}/postings")
         .groupBy("term")

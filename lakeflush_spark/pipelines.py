@@ -253,21 +253,6 @@ class CurationConfig:
     text_col: str = "text"
 
 
-def _classifier_pass(
-    weights: "dict[str, float] | None", threshold: float, text_col: str
-) -> "F.Column | None":
-    """The pre-trained quality-classifier gate predicate (None when no
-    weights are configured) — shared by batch and stream so the two
-    score the same expression (quality_score_from_text)."""
-    if weights is None:
-        return None
-    from lakeflush_spark.operators.quality_classifier import (
-        quality_score_from_text,
-    )
-
-    return quality_score_from_text(weights, text_col) >= threshold
-
-
 def quality_gate_inline(
     text_col: str,
     *,

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from lakeflush_spark.functions.text import FP_BASE, FP_MOD
 from lakeflush_spark.functions.vectors import dot_product, l2_norm, to_double_vec
-from lakeflush_spark.io import load_table, spread_for_compute
+from lakeflush_spark.io import load_table, overlap, spread_for_compute
 from lakeflush_spark.operators.dedup import (
     MINHASH_BANDS,
     MINHASH_P,
@@ -262,11 +262,9 @@ def q24(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_for_compute(load_table(spark, sf_dir, "documents"), spark)
     # r14 (guide §2.6): the 'blocked' label's capped self-join side is
     # an eager checkpoint INDEPENDENT of the minhash verify chain + CC
-    # loop below — submit it to the shared pool first so its shingle
-    # fold back-fills the verify chain's stage tails instead of
-    # running after them. Values unchanged (same frame either way).
-    from lakeflush_spark.plans._pool import plan_pool
-
+    # loop — overlapped, its shingle fold back-fills the verify chain's
+    # stage tails instead of running after them. Values unchanged (same
+    # frame either way).
     bcounts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("_bn"))
     bucket16 = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
@@ -277,19 +275,22 @@ def q24(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lit(65536 * _BLOCK_CAP) + F.col("_bn") - 1) / F.col("_bn")
         ).cast("bigint"),
     )
-    _f_blocked = plan_pool().submit(
-        lambda: docs.join(F.broadcast(bcounts), "source")
-        .where(bucket16 < bthresh)
-        .select("doc_id", "source", shingle_hash_set("text").alias("hs"))
-        .localCheckpoint()
-    )
     # localCheckpoint: the verified pair table (tiny) feeds BOTH the
     # 'lsh' label and the cluster loop — materializing it once avoids
     # recomputing the verify join per consumer, and the cluster loop
     # runs eagerly at build time anyway.
-    pairs = minhash_near_dups(docs, threshold=0.5).localCheckpoint()
+    def _verified():
+        pairs = minhash_near_dups(docs, threshold=0.5).localCheckpoint()
+        return pairs, near_dup_clusters(pairs)
+
+    blocked_docs, (pairs, cl) = overlap(
+        lambda: docs.join(F.broadcast(bcounts), "source")
+        .where(bucket16 < bthresh)
+        .select("doc_id", "source", shingle_hash_set("text").alias("hs"))
+        .localCheckpoint(),
+        _verified,
+    )
     lsh = pairs.select(F.lit("lsh").alias("method"), "id1", "id2", "jaccard")
-    cl = near_dup_clusters(pairs)
     clusters = cl.select(
         F.lit("cluster").alias("method"),
         F.col("id").alias("id1"),
@@ -326,9 +327,8 @@ def q24(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two sides are the SAME ≤_BLOCK_CAP-per-source frame — without the
     # checkpoint each side re-derived the shingle hash sets (tokenize +
     # hash + distinct, the label's dominant map cost). Bounded by the
-    # proportional cap, so never corpus-sized. The checkpoint job was
-    # submitted to the pool at the top of the builder (guide §2.6).
-    blocked_docs = _f_blocked.result()
+    # proportional cap, so never corpus-sized. The checkpoint job runs
+    # in the overlap near the top of the builder (guide §2.6).
     a, b = blocked_docs.alias("a"), blocked_docs.alias("b")
     blocked = (
         a.join(
@@ -426,19 +426,15 @@ def q26(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + 32-lane aggregate, the builder's most expensive map stage) over
     # the corpus. Bounded by the cap, so never corpus-sized.
     # r14 (guide §2.6): this checkpoint and phash_label_frames' hash
-    # checkpoint are independent eager jobs — overlap them via the
-    # shared pool (simhash fold submitted first, the 3.3k-op/row phash
-    # fold built on the main thread back-fills it).
-    from lakeflush_spark.plans._pool import plan_pool
-
-    _f_capped = plan_pool().submit(
+    # checkpoint are independent eager jobs — overlapped, the
+    # 3.3k-op/row phash fold built inline back-fills the simhash fold.
+    capped, ph_frames = overlap(
         lambda: docs.crossJoin(F.broadcast(n1))
         .where(bucket16 < thresh)
         .drop("_n")
-        .localCheckpoint()
+        .localCheckpoint(),
+        lambda: phash_label_frames(spark, sf_dir),
     )
-    ph_frames = phash_label_frames(spark, sf_dir)
-    capped = _f_capped.result()
     a = capped.alias("a")
     b = capped.alias("b")
     sim = (

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from lakeflush_spark.io import load_table, spread_for_compute
+from lakeflush_spark.io import load_table, overlap, spread_for_compute
 from lakeflush_spark.operators.similarity import (
     brute_force_topk,
     lsh_topk,
@@ -86,28 +86,6 @@ _JL_SQL_BRANCH = f""" UNION ALL
         )
     ) WHERE rank <= {TOP_K}
 """
-
-
-def _sql_topk(bucket_cond: str) -> str:
-    return (
-        _VEC_CTES
-        + f""",
-    scored AS (
-        SELECT qid AS query_id, vec_id AS neighbor_id, {_SQL_COS} AS cos_sim
-        FROM n JOIN q ON vec_id != qid {bucket_cond}
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos_sim,
-               CAST(row_number() OVER (
-                   PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-               ) AS BIGINT) AS rank
-        FROM scored
-    )
-    SELECT query_id, neighbor_id, cos_sim, rank
-    FROM ranked WHERE rank <= {TOP_K}
-    ORDER BY query_id, rank
-    """
-    )
 
 
 def _sql_topk_labeled(method: str, bucket_cond: str) -> str:
@@ -433,35 +411,6 @@ ORDER BY method, query_id, rank
 #: applicationId so a restarted session rebuilds.
 _Q55_IDX_MEMO: dict = {}
 
-#: module-level pool for the q55 builder's independent eager searches
-#: (guide §2.6). One long-lived pool, NOT per call: py4j pinned-thread
-#: mode gives every Python thread a dedicated JVM thread that is only
-#: reclaimed via InheritableThread-style cleanup — per-call pools leak
-#: JVM threads at every build.
-_Q55_POOL: list = []
-
-
-def _q55_pool():
-    if not _Q55_POOL:
-        import os
-        from concurrent.futures import ThreadPoolExecutor
-
-        # r15 pool-width A/B (VERDICT r14 #5 suggested 2-3 per guide
-        # §2.6; MEASURED otherwise — isolated medians of 5, same box,
-        # back to back): 32 cores width 7 = 5.76 s / width 3 = 8.83 /
-        # width 2 = 7.55; 8 cores width 7 = 4.34 / width 3 = 4.85.
-        # Narrower pools SERIALIZE the slow pq leg behind the FIFO
-        # queue instead of overlapping it, so 7 (every leg in flight)
-        # stays the default; the knob remains env-tunable for clusters
-        # where the legs are real work (LAKEFLUSH_Q55_POOL). The
-        # 8-core-faster residual is NOT pool width — see
-        # OPTIMIZATION_r15.md (fixed per-job overhead at sf0.1).
-        width = int(os.environ.get("LAKEFLUSH_Q55_POOL", "7"))
-        _Q55_POOL.append(ThreadPoolExecutor(
-            max_workers=max(1, width), thread_name_prefix="q55-search"
-        ))
-    return _Q55_POOL[0]
-
 
 def _q55_index(spark: SparkSession, sf_dir: str):
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -486,16 +435,20 @@ def _q55_index(spark: SparkSession, sf_dir: str):
     # kept the corpus's 32-partition layout, so every downstream probe
     # stage over these 5 rows launched 32 near-empty tasks per search.
     queries = corpus.where(corpus.vid < N_QUERIES).coalesce(1).localCheckpoint()
+    # every dir's cleanup is registered as soon as its path exists, so
+    # a failed build below leaks nothing
     idx = tempfile.mkdtemp(prefix="q55_ivf_index_")
     # idx is already a unique path; derive the int8 twin's name from it
     # (quantize_index requires an ABSENT dest, so no mkdtemp here)
     idx8 = idx + "_int8"
     idx_pq = idx + "_pq"
+    for path in (idx, idx8, idx_pq):
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
     build_ivf_index(corpus, idx, n_cells=_IVF_CELLS)
 
     # the three DERIVED builds below are independent of each other
     # (each only READS the finished float index and writes its own
-    # dir), so they run pooled (r15, guide §2.6) — previously they
+    # dir), so they overlap (r15, guide §2.6) — previously they
     # serialized ~40 s of once-per-session memo build:
     # - int8 twin (quantize_index)
     # - PQ twin (r14): m=16 six-bit codebooks off the float index —
@@ -507,9 +460,6 @@ def _q55_index(spark: SparkSession, sf_dir: str):
     #   (_cp, run, batch) store serve searches value-identical to the
     #   batch-built index, so the 'ivfstream' label hash-checks the
     #   streaming maintenance path end-to-end
-    import concurrent.futures as _cf
-
-    from lakeflush_spark.io import eager_pool
     from lakeflush_spark.operators.pq import pq_encode_index
     from lakeflush_spark.streaming.retrieval import (
         StreamVecIndexConfig,
@@ -517,6 +467,7 @@ def _q55_index(spark: SparkSession, sf_dir: str):
     )
 
     stream_work = tempfile.mkdtemp(prefix="q55_ivf_stream_")
+    atexit.register(shutil.rmtree, stream_work, ignore_errors=True)
     idx_stream = f"{stream_work}/idx"
 
     def _boot_stream():
@@ -539,27 +490,13 @@ def _q55_index(spark: SparkSession, sf_dir: str):
                 "refusing to memoize a partial streamed index"
             )
 
-    _wfs = [
-        eager_pool().submit(quantize_index, spark, idx, idx8),
-        eager_pool().submit(
-            pq_encode_index, spark, idx, idx_pq, m=16, n_codes=64
-        ),
-        eager_pool().submit(_boot_stream),
-    ]
-    try:
-        for _wf in _wfs:
-            _wf.result()
-    finally:
-        # drain siblings even when one build fails — a half-registered
-        # memo must never leave background writers running
-        _cf.wait(_wfs)
-    atexit.register(shutil.rmtree, idx, ignore_errors=True)
-    atexit.register(shutil.rmtree, idx8, ignore_errors=True)
-    atexit.register(shutil.rmtree, idx_pq, ignore_errors=True)
-    atexit.register(shutil.rmtree, stream_work, ignore_errors=True)
+    overlap(
+        lambda: quantize_index(spark, idx, idx8),
+        lambda: pq_encode_index(spark, idx, idx_pq, m=16, n_codes=64),
+        _boot_stream,
+    )
     _Q55_IDX_MEMO[key] = (corpus, queries, idx, idx8, idx_pq, idx_stream)
     return _Q55_IDX_MEMO[key]
-
 
 
 def _agreement_verdict(
@@ -673,26 +610,22 @@ def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus, queries, idx, idx8, idx_pq, idx_stream = _q55_index(spark, sf_dir)
-    # r14 optimization (guide §2.6): the five materialize=True index
-    # searches below are INDEPENDENT eager jobs over tiny frames —
-    # run sequentially they serialized ~10 sub-second driver round
-    # trips per build; a small thread pool overlaps them (FIFO
-    # scheduling back-fills idle cores exactly as §2.6 prescribes).
-    # Each thread builds its own frames; results are assembled after
-    # the join, so the union — and every value in it — is unchanged.
-    # The pool is MODULE-LEVEL and its threads long-lived: in py4j
-    # pinned-thread mode every Python thread owns a dedicated JVM
-    # thread that outlives it unless explicitly cleaned
-    # (pyspark.InheritableThread's reason to exist) — a per-call pool
-    # leaked ~7 JVM threads per build and measurably degraded the
-    # whole rest of a bench run.
+    # r14 optimization (guide §2.6): the seven search legs below are
+    # INDEPENDENT eager jobs over tiny frames — run sequentially they
+    # serialized ~10 sub-second driver round trips per build; one
+    # overlap() keeps every leg in flight (FIFO scheduling back-fills
+    # idle cores). Each leg builds its own frames; results are
+    # assembled after all of them finish, so the union — and every
+    # value in it — is unchanged. (r15 measured all seven in flight as
+    # the fastest shape at both 8 and 32 cores: narrower pools
+    # serialize the slow pq leg behind the FIFO queue.)
 
     # one quantizer train per build, shared by the flat AND twolevel
     # labels (identical by the deterministic seed draw; previously
     # each ivf_topk call re-ran the persist+count seed scan)
     cents = centroid_frame(corpus, _IVF_CELLS).persist()
 
-    # r14: _flat/_two localCheckpoint INSIDE their pool threads — they
+    # r14: _flat/_two localCheckpoint INSIDE their legs — they
     # were the only two legs still lazy at union time, so the final
     # materialization recomputed them AFTER every search had finished
     # (~1.9 s measured, the whole tail of the build). Checkpointed,
@@ -789,21 +722,9 @@ def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "neighbor_id", "cos_sim", "rank",
         ).localCheckpoint()
 
-    pool = _q55_pool()
-    f_flat = pool.submit(_flat)
-    f_served = pool.submit(_served_raw)
-    f_shuffled = pool.submit(_shuffled)
-    f_int8 = pool.submit(_int8_raw)
-    f_pq = pool.submit(_pq_raw)
-    f_ivstream = pool.submit(_ivstream)
-    f_two = pool.submit(_two)
-    flat = f_flat.result()
-    served_raw = f_served.result()
-    shuffled = f_shuffled.result()
-    int8_raw = f_int8.result()
-    pq_raw = f_pq.result()
-    ivstream = f_ivstream.result()
-    two = f_two.result()
+    flat, served_raw, shuffled, int8_raw, pq_raw, ivstream, two = overlap(
+        _flat, _served_raw, _shuffled, _int8_raw, _pq_raw, _ivstream, _two
+    )
     served = served_raw.select(
         F.lit("served").alias("method"),
         "query_id", "neighbor_id", "cos_sim", "rank",

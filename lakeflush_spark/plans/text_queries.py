@@ -36,7 +36,7 @@ from lakeflush_spark.functions.text import (
     stopword_ratio_4dp,
     token_count,
 )
-from lakeflush_spark.io import load_table, spread_for_compute
+from lakeflush_spark.io import load_table, overlap, spread_for_compute
 from lakeflush_spark.plans.queries import declare
 
 # ---- SQL fragment twins (DuckDB dialect) ----------------------------------
@@ -1457,26 +1457,19 @@ def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pays per call — the d proxy, the corpus_report card, and the
     # fused flags panel — are independent corpus scans; run
     # sequentially they cost their sum (~2.5 s), overlapped they cost
-    # ~the max (the flags panel). Submitted here, resolved where each
-    # frame is first needed; values are unchanged (same three frames).
+    # ~the max (the flags panel). Values are unchanged (same three
+    # frames).
     from lakeflush_spark.operators.report import corpus_report
-    from lakeflush_spark.plans._pool import plan_pool
 
-    _pool = plan_pool()
-    _f_d = _pool.submit(
+    d, rep, flclf = overlap(
         lambda: docs.select(
             "doc_id", "lang", "source", token_count("text").alias("n_tokens")
-        ).localCheckpoint()
-    )
-    _f_rep = _pool.submit(
-        lambda: corpus_report(docs, flag_profile=False).localCheckpoint()
-    )
-    _f_fl = _pool.submit(
+        ).localCheckpoint(),
+        lambda: corpus_report(docs, flag_profile=False).localCheckpoint(),
         lambda: docs.select(
             "source", "doc_id", F.inline(_q60_fl_gen())
-        ).localCheckpoint()
+        ).localCheckpoint(),
     )
-    d = _f_d.result()
     bucket = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("bigint") % 100
@@ -1514,8 +1507,7 @@ def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint (r14): rep is |sources| rows consumed by BOTH
     # 'card' and 'card_top' — un-checkpointed each union branch re-ran
     # corpus_report's two aggregation scans (4 corpus scans total);
-    # the checkpoint job itself was submitted to the pool above
-    rep = _f_rep.result()
+    # the checkpoint job itself runs in the overlap above
     card = rep.select(
         F.lit("card").alias("kind"),
         F.col("source").alias("key"),
@@ -1596,8 +1588,7 @@ def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds BOTH the 'card_flags' aggregation and the 'clf'/'clf_mask'
     # scoring — un-checkpointed it ran twice per materialization. The
     # checkpointed frame is 7 scalar columns per doc (guide §8 proxy);
-    # the checkpoint job itself was submitted to the pool above
-    flclf = _f_fl.result()
+    # the checkpoint job itself runs in the overlap above
     fl = flclf
     fams = {"gopher": "_gf", "c4": "_cf", "mt": "_mf"}
     fagg = fl.groupBy("source").agg(

@@ -54,11 +54,13 @@ id-only frames), not by re-running stages.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from lakeflush_spark.io import overlap
 from lakeflush_spark.operators.decontaminate import ngram_hash_set
 from lakeflush_spark.operators.dedup import content_digest, with_minhash
 from lakeflush_spark.streaming.dedup import (
@@ -973,26 +975,20 @@ def curate_stream(spark: SparkSession, cfg: CurationStreamConfig, schema=None):
             body_cols = [c for c in input_cols] + ["run", "batch"]
             if "n_stripped" in out.columns:
                 body_cols.insert(-2, "n_stripped")
-            # r14 (guide §2.6): the admitted-batch store writes below
-            # (dest/domains/url-digest/boilerplate/digest/sig/vector)
-            # are INDEPENDENT jobs — different dest dirs, each a
-            # dynamic (run,batch) overwrite over frames derived from
-            # the checkpointed `out` — run sequentially they cost
-            # their sum (~1.5 s/batch of the warm stream's fixed
-            # overhead). Submitted to the shared pool and barriered
-            # before the stats write, which stays LAST deliberately:
-            # it summarizes the batch, so a crash mid-batch leaves
-            # stores without a stats row (the recoverable direction)
-            # rather than a stats row describing missing stores.
-            # Any write error surfaces at the barrier and fails the
-            # batch for replay; the barrier waits for EVERY submitted
-            # write — including after a failure — so no orphaned
-            # dynamic overwrite keeps running into a replay of the
-            # same (run,batch) partition (r15, ADVICE r14). Frames are
-            # all CONSTRUCTED (lazily, driver-side) before the first
-            # submit, so a construction error cannot orphan a write.
-            from lakeflush_spark.io import eager_pool
-
+            # the admitted-batch store writes below (dest/domains/
+            # url-digest/boilerplate/digest/sig/vector) are INDEPENDENT
+            # jobs — different dest dirs, each a dynamic (run,batch)
+            # overwrite over frames derived from the checkpointed
+            # `out` — run sequentially they cost their sum (~1.5
+            # s/batch of the warm stream's fixed overhead), so they run
+            # through one overlap() call, which returns only after
+            # every write has finished. The stats write stays LAST
+            # deliberately: it summarizes the batch, so a crash
+            # mid-batch leaves stores without a stats row (the
+            # recoverable direction) rather than a stats row
+            # describing missing stores. Frames are all CONSTRUCTED
+            # (lazily, driver-side) before the first write starts, so
+            # a construction error cannot orphan a write.
             _writes = [
                 (out.select(*body_cols), cfg.dest_dir, {"nrows": n_out})
             ]
@@ -1101,22 +1097,11 @@ def curate_stream(spark: SparkSession, cfg: CurationStreamConfig, schema=None):
                     # admitted vectors ⊆ out
                     {"parts": ("run", "batch", *sem_extra), "nrows": n_out},
                 ))
-            # submit everything at once, then barrier: every store
-            # write must land before the stats row. On failure, wait()
-            # drains the surviving futures BEFORE the first exception
-            # propagates — a same-process replay of this (run, batch)
-            # must never race a still-running orphaned overwrite.
-            import concurrent.futures as _cf
-
-            _wfs = [
-                eager_pool().submit(_writer, _df, _dir, **_kw)
+            # every store write lands before the stats row
+            overlap(*(
+                functools.partial(_writer, _df, _dir, **_kw)
                 for _df, _dir, _kw in _writes
-            ]
-            try:
-                for _wf in _wfs:
-                    _wf.result()
-            finally:
-                _cf.wait(_wfs)
+            ))
             _mark("w_stores")
             from lakeflush_spark.io import local_rows_df
 

@@ -49,6 +49,7 @@ import pyspark.sql.functions as F
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from lakeflush_spark.io import overlap
 from lakeflush_spark.operators.dedup import (
     MINHASH_BANDS,
     MINHASH_NUM,
@@ -346,37 +347,25 @@ def dedup_stream(spark: SparkSession, cfg: StreamDedupConfig, schema=None):
             # one cached count sizes both writes (and materializes the
             # pin before the first write starts replacing files)
             n_out = out.count()
-            # r14 (guide §2.6): the dest and digest writes are
-            # independent jobs over the checkpointed snapshot —
-            # overlap them via the shared pool; failure in either
-            # surfaces here and fails the batch for replay. The
-            # finally-wait (r15, ADVICE r14) drains the pooled write
-            # even when the inline one raises, so a replay of this
-            # (run, batch) never races an orphaned overwrite.
-            import concurrent.futures as _cf
-
-            from lakeflush_spark.io import eager_pool
-
-            _wf = eager_pool().submit(
+            # the dest and digest writes are independent jobs over
+            # the checkpointed snapshot; a failure in either fails the
+            # batch for replay
+            overlap(
                 lambda: (
                     _sized(out.drop("_digest"), n_out)
                     .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("run", "batch")
                     .parquet(cfg.dest_dir)
-                )
-            )
-            try:
-                (
+                ),
+                lambda: (
                     _sized(store, n_out)
                     .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy(*store_parts)
                     .parquet(cfg.digest_dir)
-                )
-            finally:
-                _cf.wait([_wf])
-            _wf.result()
+                ),
+            )
         finally:
             # checkpointed blocks free on GC — drop the reference
             del out
@@ -710,26 +699,17 @@ def near_dup_stream(spark: SparkSession, cfg: StreamNearDupConfig, schema=None):
         try:
             body_cols = [c for c in batch_df.columns] + ["run", "batch"]
             n_out = out.count()
-            # r14 (guide §2.6): dest and sig-store writes are
-            # independent jobs over the checkpointed snapshot —
-            # overlap them (the _write_outputs rationale); the
-            # finally-wait drains the pooled write even on inline
-            # failure (r15, ADVICE r14 — no orphaned overwrites)
-            import concurrent.futures as _cf
-
-            from lakeflush_spark.io import eager_pool
-
-            _wf = eager_pool().submit(
+            # dest and sig-store writes are independent jobs over the
+            # checkpointed snapshot (the _write_outputs rationale)
+            overlap(
                 lambda: (
                     _sized(out.select(*body_cols), n_out)
                     .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("run", "batch")
                     .parquet(cfg.dest_dir)
-                )
-            )
-            try:
-                (
+                ),
+                lambda: (
                     _sized(
                         _bands_long(out, cfg.id_col)
                         .withColumn("run", F.lit(run))
@@ -740,10 +720,8 @@ def near_dup_stream(spark: SparkSession, cfg: StreamNearDupConfig, schema=None):
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("run", "batch")
                     .parquet(cfg.sig_dir)
-                )
-            finally:
-                _cf.wait([_wf])
-            _wf.result()
+                ),
+            )
         finally:
             del out
 

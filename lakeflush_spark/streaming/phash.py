@@ -43,6 +43,7 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from lakeflush_spark.io import overlap
 from lakeflush_spark.operators.phash import (
     DEFAULT_MAX_HAMMING,
     PHASH_BITS,
@@ -226,26 +227,11 @@ def phash_dedup_stream(
                 .withColumn("run", F.lit(run))
                 .withColumn("batch", F.lit(int(batch_id)))
             )
-            # r14 (guide §2.6): the hash-store and survivors writes are
-            # independent jobs (the store reads the pinned `fresh`
-            # frame, the dest chain reads the source payloads) —
-            # overlap them via the shared pool; failure in either
-            # surfaces here and fails the batch for replay; the
-            # finally-wait drains the pooled write even on inline
-            # failure (r15, ADVICE r14 — no orphaned overwrites)
-            import concurrent.futures as _cf
-
-            from lakeflush_spark.io import eager_pool
-
-            _wf = eager_pool().submit(
-                lambda: (
-                    _sized(store, n_new)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("run", "batch")
-                    .parquet(cfg.hash_dir)
-                )
-            )
+            # the hash-store and survivors writes are independent jobs
+            # (the store reads the pinned `fresh` frame, the dest
+            # chain reads the source payloads); a failure in either
+            # fails the batch for replay
+            #
             # survivors: everything not dropped — undecodable payloads
             # have no hash row, join nothing, and pass through (SKIP,
             # not drop). Sizing uses the ACTUAL survivor count (r12;
@@ -262,7 +248,7 @@ def phash_dedup_stream(
             # proportional by construction, and that chain is the only
             # compute the coalesce touches (the hash/store chain is
             # pinned separately above).
-            try:
+            def _write_survivors():
                 dropped = within_losers.unionByName(
                     hist_losers
                 ).withColumnRenamed("media_id", cfg.id_col)
@@ -284,9 +270,17 @@ def phash_dedup_stream(
                     .partitionBy("run", "batch")
                     .parquet(cfg.dest_dir)
                 )
-            finally:
-                _cf.wait([_wf])
-            _wf.result()
+
+            overlap(
+                lambda: (
+                    _sized(store, n_new)
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("run", "batch")
+                    .parquet(cfg.hash_dir)
+                ),
+                _write_survivors,
+            )
         finally:
             del hashes  # checkpointed blocks free on GC
 

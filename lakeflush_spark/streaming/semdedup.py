@@ -48,6 +48,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from lakeflush_spark.functions.vectors import dot_product
+from lakeflush_spark.io import overlap
 from lakeflush_spark.operators.similarity import (
     _nearest_cells,
     _pack_cells,
@@ -579,33 +580,23 @@ def semdedup_stream(spark: SparkSession, cfg: StreamSemDedupConfig, schema=None)
             store = store.withColumn("run", F.lit(run)).withColumn(
                 "batch", F.lit(int(batch_id))
             )
-            # r14 (guide §2.6): the store and dest writes are
-            # independent jobs over the already-materialized
-            # indexed/dropped frames — overlap them via the shared
-            # pool; a failure in either surfaces here and fails the
-            # batch for replay exactly as the sequential writes did;
-            # the finally-wait drains the pooled write even on inline
-            # failure (r15, ADVICE r14 — no orphaned overwrites)
-            import concurrent.futures as _cf
-
-            from lakeflush_spark.io import eager_pool
-
-            _wf = eager_pool().submit(
+            # the store and dest writes are independent jobs over the
+            # already-materialized indexed/dropped frames; a failure in
+            # either fails the batch for replay
+            survivors = batch_df.join(
+                F.broadcast(dropped.withColumnRenamed("vid", cfg.id_col)),
+                cfg.id_col,
+                "left_anti",
+            )
+            overlap(
                 lambda: (
                     _sized(store, n_out)
                     .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("run", "batch", *extra_parts)
                     .parquet(cfg.vec_dir)
-                )
-            )
-            try:
-                survivors = batch_df.join(
-                    F.broadcast(dropped.withColumnRenamed("vid", cfg.id_col)),
-                    cfg.id_col,
-                    "left_anti",
-                )
-                (
+                ),
+                lambda: (
                     _sized(
                         survivors.withColumn("run", F.lit(run)).withColumn(
                             "batch", F.lit(int(batch_id))
@@ -616,10 +607,8 @@ def semdedup_stream(spark: SparkSession, cfg: StreamSemDedupConfig, schema=None)
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("run", "batch")
                     .parquet(cfg.dest_dir)
-                )
-            finally:
-                _cf.wait([_wf])
-            _wf.result()
+                ),
+            )
         finally:
             del indexed  # checkpointed blocks free on GC
             if dropped is not None:

@@ -8,6 +8,8 @@ plane, SURVEY §1.2). Round-trips verified by row-multiset equality.
 import glob
 import os
 
+import pytest
+
 from lakeflush_spark.io import load_table
 from lakeflush_spark.operators.compaction import (
     CompactionConfig,
@@ -112,6 +114,49 @@ def test_ivf_recall_against_bruteforce(spark, sf_dir):
     assert exact, "baseline non-empty"
     recall = len(ivf & exact) / len(exact)
     assert recall >= 0.6, f"IVF recall@10 too low: {recall:.2f}"
+
+
+def test_q55_index_registers_temp_dir_cleanup_before_the_builds(
+    spark, sf_dir, monkeypatch
+):
+    # a derived build that fails must not leak the memo's temp dirs:
+    # each dir's atexit cleanup is registered as soon as it exists
+    import atexit
+    import shutil
+
+    import lakeflush_spark.operators.pq as pq
+    import lakeflush_spark.operators.similarity as sim
+    import lakeflush_spark.plans.similarity_queries as sq
+    import lakeflush_spark.streaming.retrieval as stream_ret
+
+    registered = []
+
+    def record(fn, path, **kw):
+        registered.append(path)
+
+    def fail(*a, **kw):
+        raise RuntimeError("int8 build failed")
+
+    class _Finished:
+        def awaitTermination(self, timeout):
+            return True
+
+    monkeypatch.setattr(atexit, "register", record)
+    monkeypatch.setattr(sim, "build_ivf_index", lambda *a, **kw: None)
+    monkeypatch.setattr(sim, "quantize_index", fail)
+    monkeypatch.setattr(pq, "pq_encode_index", lambda *a, **kw: None)
+    monkeypatch.setattr(stream_ret, "ivf_index_stream", lambda *a, **kw: _Finished())
+    monkeypatch.setattr(sq, "_Q55_IDX_MEMO", {})
+    try:
+        with pytest.raises(RuntimeError, match="int8 build failed"):
+            sq._q55_index(spark, sf_dir)
+        assert sq._Q55_IDX_MEMO == {}
+        idx = min((p for p in registered if "q55_ivf_index_" in p), key=len)
+        (work,) = [p for p in registered if os.path.basename(p).startswith("q55_ivf_stream_")]
+        assert sorted(registered) == sorted([idx, idx + "_int8", idx + "_pq", work])
+    finally:
+        for path in registered:
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def test_ivf_kmeans_refinement_recall(spark, sf_medium_dir):

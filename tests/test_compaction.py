@@ -659,23 +659,38 @@ def test_csv_header_collector_ignores_non_matching_files(spark, tmp_path):
 
 
 def test_compact_leaves_session_error_policy_alone(spark, small_json_lake, tmp_path):
-    # O19's skip policy rides each read as options: a compaction must not
-    # make every later read in the caller's session skip bad files
-    lake, _ = small_json_lake
+    # O19's skip policy rides each read as options and the tiny-file
+    # open cost is restored after the call: a compaction must not make
+    # every later read in the caller's session skip bad files or plan
+    # its scans differently
+    lake, ev = small_json_lake
+    pq_lake = str(tmp_path / "pq_lake")
+    ev.repartition(20).write.parquet(pq_lake)
+    big_lake = tmp_path / "big_lake"  # > 16 KiB files: the line reader
+    big_lake.mkdir()
+    for i in range(2):
+        (big_lake / f"f{i}.json").write_text('{"v": "%s"}\n' % ("x" * 40_000))
     keys = ("spark.sql.files.ignoreCorruptFiles", "spark.sql.files.ignoreMissingFiles")
-    saved = {k: spark.conf.get(k) for k in keys}
+    open_cost = "spark.sql.files.openCostInBytes"
+    saved = {k: spark.conf.get(k) for k in (*keys, open_cost)}
     try:
         for k in keys:
             spark.conf.set(k, "false")
-        for parsed in (False, True):
-            compact(
-                spark,
-                CompactionConfig(
-                    source_dir=lake, dest_dir=str(tmp_path / f"out{parsed}"),
-                    file_format="json", parsed=parsed,
-                ),
-            )
-        assert {k: spark.conf.get(k) for k in keys} == dict.fromkeys(keys, "false")
+        spark.conf.set(open_cost, "1234567")
+        runs = {
+            "binary": dict(source_dir=lake, file_format="json"),
+            "parsed": dict(source_dir=lake, file_format="json", parsed=True),
+            "lines": dict(source_dir=str(big_lake), file_format="json"),
+            "parquet": dict(source_dir=pq_lake, file_format="parquet"),
+        }
+        for name, kw in runs.items():
+            compact(spark, CompactionConfig(dest_dir=str(tmp_path / name), **kw))
+            assert {k: spark.conf.get(k) for k in keys} == dict.fromkeys(keys, "false")
+            assert spark.conf.get(open_cost) == "1234567", name
+        spark.conf.unset(open_cost)
+        compact(spark, CompactionConfig(dest_dir=str(tmp_path / "unset"),
+                                        **runs["binary"]))
+        assert spark.conf.get(open_cost, None) is None
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
@@ -753,3 +768,70 @@ def test_compact_typed_csv_samples_rows_and_holds_cap(spark, tmp_path, monkeypat
     assert max(sizes) <= cap_mb * 1024 * 1024, sizes
     back = read_bundles(spark, str(tmp_path / "out"), "csv", schema=schema)
     assert back.count() == 4000
+
+
+_MIXED_LAKE = {
+    "a.json": '{"v": 1}\n{"v": 2}\n',
+    "b.json": '{"v": 3}\n',
+    "c.csv": "v\n4\n5\n",
+    "README": "this lake holds json and csv files\n",
+    "q,r.txt": "6\n",
+}
+
+
+@pytest.mark.parametrize(
+    "patterns", [["*.json", "*.csv"], ["[!R]*"], ["q,r.txt", "*.csv"]]
+)
+def test_match_patterns_select_the_same_files_in_every_reader(
+    spark, tmp_path, monkeypatch, patterns
+):
+    # every reader and listing applies ALL patterns with fnmatch
+    # semantics, however many there are
+    import fnmatch
+    from urllib.parse import unquote
+
+    import lakeflush_spark.operators.compaction as comp
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    for name, body in _MIXED_LAKE.items():
+        (lake / name).write_text(body)
+    want = {n for n in _MIXED_LAKE if any(fnmatch.fnmatchcase(n, p) for p in patterns)}
+    cfg = CompactionConfig(source_dir=str(lake), dest_dir="", match_patterns=patterns)
+
+    def names(df, col=F.input_file_name()):
+        return {os.path.basename(unquote(r[0])) for r in df.select(col).distinct().collect()}
+
+    assert names(comp.read_source(spark, cfg)) == want
+    assert names(comp.read_source(spark, replace(cfg, whole_file_records=True))) == want
+    assert names(comp._opaque_binary_raw(spark, cfg), F.col("path")) == want
+    for fmt in ("json", "csv"):
+        parsed = replace(cfg, parsed=True, file_format=fmt, csv_header=False)
+        assert names(comp.read_source(spark, parsed)) == want, fmt
+    assert names(scan_manifest(spark, str(lake), patterns), F.col("file_path")) == want
+    first = comp._first_source_file(spark, cfg)
+    assert os.path.basename(unquote(first)) in want
+    monkeypatch.setattr(comp, "hadoop_fs", lambda *_: None)
+    assert os.path.basename(unquote(comp._first_source_file(spark, cfg))) in want
+
+
+def test_compact_line_reader_honours_every_match_pattern(spark, tmp_path):
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    for name, body in _MIXED_LAKE.items():
+        (lake / name).write_text(body)
+    # big files keep the opaque compaction on the line reader
+    pad = {n: "x" * 40_000 + "\n" for n in ("a.json", "c.csv", "README")}
+    for name, line in pad.items():
+        with open(lake / name, "a") as f:
+            f.write(line)
+    out = str(tmp_path / "out")
+    compact(spark, CompactionConfig(source_dir=str(lake), dest_dir=out, file_format="json",
+                                    match_patterns=["*.json", "*.csv"]))
+    got = sorted(r.value for r in read_bundles(spark, out, "text").collect())
+    want = sorted(
+        line
+        for n in ("a.json", "b.json", "c.csv")
+        for line in (lake / n).read_text().splitlines()
+    )
+    assert got == want
