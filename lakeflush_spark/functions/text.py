@@ -454,34 +454,6 @@ def gopher_stopword_hits(text: Column | str) -> Column:
     )
 
 
-def symbol_word_ratio_4dp(text: Column | str) -> Column:
-    """('#' + '...') occurrences per whitespace-split word, 4dp
-    half-up (exact)."""
-    return _round_half_up_div(
-        F.lit(10000) * symbol_hits(text), word_count(text)
-    ).cast("double") / F.lit(10000.0)
-
-
-def bullet_line_ratio_4dp(text: Column | str) -> Column:
-    nl = F.size(doc_lines(text)).cast("bigint")
-    return _round_half_up_div(F.lit(10000) * bullet_line_hits(text), nl).cast(
-        "double"
-    ) / F.lit(10000.0)
-
-
-def ellipsis_line_ratio_4dp(text: Column | str) -> Column:
-    nl = F.size(doc_lines(text)).cast("bigint")
-    return _round_half_up_div(F.lit(10000) * ellipsis_line_hits(text), nl).cast(
-        "double"
-    ) / F.lit(10000.0)
-
-
-def alpha_word_ratio_4dp(text: Column | str) -> Column:
-    return _round_half_up_div(
-        F.lit(10000) * alpha_word_hits(text), word_count(text)
-    ).cast("double") / F.lit(10000.0)
-
-
 def dup_line_ratio_4dp(text: Column | str) -> Column:
     """Fraction of lines that are repeats of an earlier line
     (MassiveText's duplicate-line filter signal), 4dp half-up exact:

@@ -28,14 +28,16 @@ Reference parity map (file:line cites into /root/reference):
       -> direct write to the destination root; optional processing-time
          Hive partitions via ``partitionBy`` on strftime-derived columns
 - O15 flush audit sidecar         utils/file/store.py:10-21
-      -> one row per bundle appended to a queryable parquet audit table
+      -> one row per bundle in a queryable parquet audit table; each
+         run's rows are ONE file the driver writes and renames in
 - O19 error-skip                  collectors/local_lake.py:69-72
       -> ``ignoreCorruptFiles`` / ``ignoreMissingFiles`` per-read
          options (never the caller's session conf)
 
 Scale stance: listing, reading and writing all distribute; the only
-driver-side work is sizing the bundles from a small sample: the head
-of one source file (at most 256 KB) or a few hundred parsed records.
+driver-side work is sizing the bundles from a small sample (the head
+of one source file, at most 256 KB, or a few hundred parsed records)
+and writing the audit file (one row per bundle).
 At 100 TB with 128 MB bundles this plans ~800k write tasks — the
 repartition count is derived from data size, never hardcoded.
 """
@@ -46,16 +48,35 @@ import gzip as _gzip
 import math
 import uuid
 from dataclasses import dataclass, field, replace
+from datetime import datetime, timezone
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType
 
-from lakeflush_spark.io import hadoop_fs, local_path
+from lakeflush_spark.io import commit_parquet, hadoop_fs, local_path
 from lakeflush_spark.operators.manifest import name_glob, scan_manifest
 
 _AUDIT_DIRNAME = "_lakeflush_audit"
+#: one row per delivered bundle; ``flushed_at`` is a UTC-adjusted
+#: INT64 timestamp, which Spark reads as TIMESTAMP
+_AUDIT_SCHEMA = pa.schema(
+    [
+        pa.field(name, dtype, nullable=False)
+        for name, dtype in (
+            ("run_id", pa.string()),
+            ("bundle_path", pa.string()),
+            ("bytes", pa.int64()),
+            ("source", pa.string()),
+            ("format", pa.string()),
+            ("compressed", pa.bool_()),
+            ("source_fp", pa.string()),
+            ("flushed_at", pa.timestamp("us", tz="UTC")),
+        )
+    ]
+)
 
 # Spark's JSON reader/writer defaults truncate timestamps to millis;
 # pin microsecond-precision patterns so parse(write(x)) == x.
@@ -399,12 +420,26 @@ def _opaque_binary_raw(spark: SparkSession, cfg: CompactionConfig) -> DataFrame:
     """binaryFile scan of the source lake with glob filtering applied,
     keeping the metadata columns (path/length/content).
 
-    The binaryFile source prunes ``content`` when it isn't selected, so
-    metadata-only aggregates over this frame (count/sum(length)) never
-    open a single file — and they REUSE the one driver-side listing the
-    write will use, instead of re-walking the lake.
+    The frame's file index holds the one driver-side listing the write
+    will use, so stats read off it (:func:`_indexed_stats`) never
+    re-walk the lake. An aggregate over the frame reuses that listing
+    too, but it is a Spark job whose tasks ``getFileStatus`` every
+    file even when ``content`` is pruned.
     """
     return _reader(spark, cfg).format("binaryFile").load(cfg.source_dir)
+
+
+def _indexed_stats(df: DataFrame) -> tuple[int, int]:
+    """(files, bytes) of a file-source frame, read off its own file
+    index with no Spark job: the non-empty files its scan will plan
+    (the index's ``listFiles`` drops empty files, as the scan does)
+    and their summed lengths. Needs the py4j bridge."""
+    jvm = df.sparkSession._jvm
+    index = df._jdf.queryExecution().analyzed().relation().location()
+    nil = jvm.org.apache.spark.api.python.PythonUtils.toSeq(jvm.java.util.ArrayList())
+    dirs = index.listFiles(nil, nil)
+    n_files = sum(dirs.apply(i).files().size() for i in range(dirs.size()))
+    return n_files, int(index.sizeInBytes())
 
 
 def _binary_values(df: DataFrame) -> DataFrame:
@@ -429,9 +464,12 @@ def compact(spark: SparkSession, cfg: CompactionConfig) -> CompactionResult:
 
     Job structure (local AND cluster):
 
-    1. source stats: a metadata-only binaryFile aggregate in opaque
-       mode (no file opens), else Hadoop's ``getContentSummary`` — or
-       the manifest aggregate when match patterns are set;
+    1. source stats from metadata, no Spark job: opaque mode reads them
+       off the binaryFile relation's file index (the listing the write
+       reuses), other modes call Hadoop's ``getContentSummary``. A
+       metadata-only aggregate job runs instead when match patterns
+       are set outside opaque mode, for ``skip_unchanged`` (its
+       fingerprint needs per-file mtimes) and without the py4j bridge;
     2. bundle sizing: a driver-side head sample of the first source
        file for opaque and all-string CSV sources (no Spark job), one
        sampling job over the parsed rows for typed schemas;
@@ -441,7 +479,11 @@ def compact(spark: SparkSession, cfg: CompactionConfig) -> CompactionResult:
        with no shuffle. Either way ``maxRecordsPerFile`` rolls bundles
        inside each task the way the reference's rotation check does
        per record (core/file_handler.py:52-57);
-    4. the audit append.
+    4. the audit rows, one parquet file written from the driver (no
+       Spark job).
+
+    So an opaque or all-string CSV pass runs the bundle write as its
+    only Spark job.
 
     Every job runs with a 64 KiB ``spark.sql.files.openCostInBytes``,
     so thousands of tiny files pack densely into scan partitions (the
@@ -474,23 +516,26 @@ def _compact(spark: SparkSession, cfg: CompactionConfig) -> CompactionResult:
     raw = None
     fp_sum = None
     if opaque:
-        # One listing for stats AND read: metadata-only aggregate over
-        # the binaryFile index (content column pruned — no file opens).
-        # The skip_unchanged fingerprint rides the SAME aggregate, so a
-        # no-op re-run pays exactly one listing pass.
+        # One listing for stats AND read: the binaryFile relation's own
+        # file index. The skip_unchanged fingerprint needs per-file
+        # mtimes, so it (and a session without the py4j bridge) runs
+        # an aggregate over the same listing instead.
         try:
             raw = _opaque_binary_raw(spark, cfg)
-            aggs = [
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum("length"), F.lit(0)).alias("b"),
-            ]
-            if cfg.skip_unchanged:
-                aggs.append(_fp_sum_col("path", "modificationTime", "length").alias("fp"))
-            stats = raw.agg(*aggs).first()
-            n_files, total_bytes = int(stats["n"]), int(stats["b"])
-            if cfg.skip_unchanged:
-                fp_sum = int(stats["fp"])
-        except Exception:  # source root missing
+            if cfg.skip_unchanged or hadoop_fs(spark, cfg.source_dir) is None:
+                aggs = [
+                    F.count(F.lit(1)).alias("n"),
+                    F.coalesce(F.sum("length"), F.lit(0)).alias("b"),
+                ]
+                if cfg.skip_unchanged:
+                    aggs.append(_fp_sum_col("path", "modificationTime", "length").alias("fp"))
+                stats = raw.agg(*aggs).first()
+                n_files, total_bytes = int(stats["n"]), int(stats["b"])
+                if cfg.skip_unchanged:
+                    fp_sum = int(stats["fp"])
+            else:
+                n_files, total_bytes = _indexed_stats(raw)
+        except AnalysisException:  # source root missing
             n_files, total_bytes = 0, 0
         first_file = None
     else:
@@ -763,33 +808,30 @@ def _last_audit_fingerprint(spark: SparkSession, cfg: CompactionConfig) -> str |
 
 def _write_audit(spark: SparkSession, cfg: CompactionConfig, bundles, source_fp: str = "") -> str:
     """O15 upgraded: per-bundle audit rows in a parquet table instead of
-    sidecar files in a hidden directory (utils/file/store.py:10-21)."""
-    audit_path = f"{cfg.dest_dir.rstrip('/')}/{_AUDIT_DIRNAME}"
-    run_id = uuid.uuid4().hex
-    if bundles:
-        # A VALUES relation keeps this JVM-only — createDataFrame from
-        # Python rows spins up the Python worker path (~6 s of overhead
-        # for a 3-row table).
-        def q(s: str) -> str:
-            return "'" + s.replace("'", "''") + "'"
+    sidecar files in a hidden directory (utils/file/store.py:10-21).
 
-        values = ",".join(
-            f"({q(run_id)}, {q(p)}, {int(sz)}L, {q(cfg.source_dir)}, "
-            f"{q(cfg.file_format)}, {str(bool(cfg.compress)).lower()}, {q(source_fp)})"
-            for p, sz, _ in bundles
+    The rows are built on the driver and committed as ONE parquet file
+    per run (``io.commit_parquet``: hidden temp name, then rename), so
+    the run's rows become visible atomically — an incremental consumer
+    (read_increment) can never observe half a run's bundles — and the
+    audit costs no Spark job."""
+    audit_path = f"{cfg.dest_dir.rstrip('/')}/{_AUDIT_DIRNAME}"
+    if bundles:
+        n = len(bundles)
+        table = pa.table(
+            {
+                "run_id": [uuid.uuid4().hex] * n,
+                "bundle_path": [p for p, _, _ in bundles],
+                "bytes": [int(sz) for _, sz, _ in bundles],
+                "source": [cfg.source_dir] * n,
+                "format": [cfg.file_format] * n,
+                "compressed": [bool(cfg.compress)] * n,
+                "source_fp": [source_fp] * n,
+                "flushed_at": [datetime.now(timezone.utc)] * n,
+            },
+            schema=_AUDIT_SCHEMA,
         )
-        (
-            spark.sql(
-                f"SELECT *, current_timestamp() AS flushed_at FROM (VALUES {values}) AS "
-                "t(run_id, bundle_path, bytes, source, format, compressed, source_fp)"
-            )
-            # ONE part file per run: the run's audit rows become visible
-            # atomically (file rename), so an incremental consumer
-            # (read_increment) can never observe half a run's bundles
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(audit_path)
-        )
+        commit_parquet(spark, audit_path, table)
     return audit_path
 
 

@@ -191,9 +191,12 @@ _CODEBOOK_CACHE: dict = {}
 def read_codebooks(spark, base: str):
     """Load the ``codebooks/`` sidecar back into the ``(m, n_codes,
     dsub)`` numpy array (tiny — m·n_codes rows). Cached per
-    (session, dir): the sidecar never changes after the build."""
+    (session, dir): the sidecar never changes after the build. The
+    key is the ``rstrip('/')`` form :func:`pq_encode_index`
+    invalidates, so ``idx/`` and ``idx`` share one entry."""
     import numpy as np
 
+    base = base.rstrip("/")
     key = (spark.sparkContext.applicationId, base)
     if key in _CODEBOOK_CACHE:
         return _CODEBOOK_CACHE[key]

@@ -17,12 +17,14 @@ Reference parity (file:line into /root/reference):
 - O12 empty-batch skip             core/flusher.py:37-42
       -> empty micro-batches write nothing and append no audit row.
 
-Scale stance: each micro-batch is the SAME fused read→write job the
-batch compactor runs (no shuffle; ``maxRecordsPerFile`` rolls bundles
-inside tasks). State is only the source's file-listing checkpoint —
-at 100 TB/day the knob that matters is maxBytesPerTrigger (bound the
-per-batch working set) and a dest layout partitioned by arrival time
-so audit/bundle listing never scans history.
+Scale stance: each micro-batch is the same read→write job the batch
+compactor runs: a ``repartition`` to the batch's bundle count (below
+2048 bundles, a shuffle of the batch's own bytes), then
+``maxRecordsPerFile`` rolls bundles inside tasks. State is only the
+source's file-listing checkpoint — at 100 TB/day the knob that matters
+is maxBytesPerTrigger (bound the per-batch working set, and with it
+the shuffle) and a dest layout partitioned by arrival time so
+audit/bundle listing never scans history.
 """
 
 from __future__ import annotations
@@ -30,11 +32,29 @@ from __future__ import annotations
 import os
 import uuid
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from lakeflush_spark.io import commit_parquet
 from lakeflush_spark.operators.compaction import partition_columns
+
+#: one row per non-empty micro-batch (``flushed_at``: UTC-adjusted
+#: INT64 timestamp, read by Spark as TIMESTAMP)
+_AUDIT_SCHEMA = pa.schema(
+    [
+        pa.field(name, dtype, nullable=False)
+        for name, dtype in (
+            ("run_id", pa.string()),
+            ("batch_id", pa.int64()),
+            ("records", pa.int64()),
+            ("bytes", pa.int64()),
+            ("flushed_at", pa.timestamp("us", tz="UTC")),
+        )
+    ]
+)
 
 
 @dataclass
@@ -113,8 +133,13 @@ def _validate_dest_layout(cfg: StreamCompactionConfig) -> None:
 def _bundle_writer(cfg: StreamCompactionConfig):
     """foreachBatch callback: size-targeted bundle write + audit row.
 
-    Per-batch record sizing is a single JVM aggregate over the batch
-    (no driver-side sampling needed — the batch is already listed).
+    Spark runs two actions per non-empty micro-batch: an aggregate
+    that counts the batch's records and decompressed bytes to size the
+    bundles (the listed file lengths would under-size bundles from gzip
+    sources), then the bundle write. The audit row is one parquet file
+    written from the driver (``io.commit_parquet``, no Spark job); in
+    exactly-once mode it lands in ``batch_id=N/``, which a replay of
+    batch N replaces.
     """
     target_bytes = int(cfg.max_size_mb * 1024 * 1024)
     part_cols = (
@@ -165,22 +190,27 @@ def _bundle_writer(cfg: StreamCompactionConfig):
 
         # audit: one row per micro-batch (queryable upgrade of the
         # reference's per-bundle sidecar files, utils/file/store.py:10-21)
-        audit_row = spark.sql(
-            "SELECT "
-            f"'{uuid.uuid4().hex}' AS run_id, {int(batch_id)}L AS batch_id, "
-            f"{n_records}L AS records, {batch_bytes}L AS bytes, "
-            f"current_timestamp() AS flushed_at"
+        row = pa.table(
+            {
+                "run_id": [uuid.uuid4().hex],
+                "batch_id": [int(batch_id)],
+                "records": [n_records],
+                "bytes": [batch_bytes],
+                "flushed_at": [datetime.now(timezone.utc)],
+            },
+            schema=_AUDIT_SCHEMA,
         )
         audit_path = f"{cfg.dest_dir.rstrip('/')}/_lakeflush_audit_stream"
         if cfg.exactly_once:
-            (
-                audit_row.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(audit_path)
+            # batch_id is the partition directory, not a file column
+            commit_parquet(
+                spark,
+                f"{audit_path}/batch_id={int(batch_id)}",
+                row.drop_columns(["batch_id"]),
+                replace=True,
             )
         else:
-            audit_row.write.mode("append").parquet(audit_path)
+            commit_parquet(spark, audit_path, row)
 
     return write_batch
 

@@ -277,6 +277,67 @@ def test_read_increment_consumes_only_new_runs(spark, sf_dir, tmp_path):
     assert audit_table(spark, dest).select("run_id").distinct().count() == 2
 
 
+def test_audit_reads_spark_written_and_driver_written_files(spark, tmp_path):
+    """One audit dir may hold a file Spark's parquet writer produced
+    (a VALUES relation, INT96 ``flushed_at``: how audit rows were
+    written before the driver wrote them) beside a driver-written one
+    (INT64 UTC ``flushed_at``). ``audit_table``, ``read_increment`` and
+    ``skip_unchanged`` read both."""
+    import json
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakeflush_spark.operators.compaction import audit_table, read_increment
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    for i in range(20):
+        (lake / f"f{i:02d}.json").write_text(json.dumps({"i": i}) + "\n")
+    dest = str(tmp_path / "out")
+    cfg = CompactionConfig(source_dir=str(lake), dest_dir=dest, skip_unchanged=True)
+    first = compact(spark, cfg)
+    audit_dir = first.audit_path
+    rows = pq.read_table(audit_dir).to_pylist()
+    assert len(rows) == len(first.bundles)
+    shutil.rmtree(audit_dir)
+    values = ",".join(
+        f"('{r['run_id']}', '{r['bundle_path']}', {r['bytes']}L, '{r['source']}', "
+        f"'{r['format']}', {str(r['compressed']).lower()}, '{r['source_fp']}')"
+        for r in rows
+    )
+    spark.sql(
+        f"SELECT *, current_timestamp() AS flushed_at FROM (VALUES {values}) AS "
+        "t(run_id, bundle_path, bytes, source, format, compressed, source_fp)"
+    ).coalesce(1).write.mode("append").parquet(audit_dir)
+    assert pq.read_table(audit_dir).schema.field("flushed_at").type == pa.timestamp("ns")
+
+    assert compact(spark, cfg).skipped  # fingerprint read off the Spark-written file
+    inc1 = read_increment(spark, dest, fmt="text", cursor=None)
+    assert inc1.df.count() == 20
+
+    (lake / "f20.json").write_text(json.dumps({"i": 20}) + "\n")
+    second = compact(spark, cfg)
+    assert second.bundles and not second.skipped
+    files = [f for f in os.listdir(audit_dir) if f.endswith(".parquet") and f[0] != "."]
+    assert len(files) == 2
+
+    audit = audit_table(spark, dest)
+    assert dict(audit.dtypes) == {
+        "run_id": "string", "bundle_path": "string", "bytes": "bigint",
+        "source": "string", "format": "string", "compressed": "boolean",
+        "source_fp": "string", "flushed_at": "timestamp",
+    }
+    assert audit.count() == len(first.bundles) + len(second.bundles)
+    assert audit.select("run_id").distinct().count() == 2
+    inc2 = read_increment(spark, dest, fmt="text", cursor=inc1.cursor)
+    assert sorted(inc2.bundle_paths) == sorted(second.bundles)
+    assert inc2.df.count() == 21
+    # the latest run is the driver-written one: an identical re-run skips
+    assert compact(spark, cfg).skipped
+
+
 @pytest.mark.parametrize("parsed", [False, True])
 def test_compact_schema_drift_union(spark, tmp_path, parsed):
     """Schema evolution across source eras: a column appearing in later

@@ -389,29 +389,38 @@ def test_csv_reader_empty_first_file_does_not_eat_next_header(tmp_path):
     assert list(r.read(str(again))) == ["3,4"]
 
 
-def test_csv_header_collector_runs_three_jobs(spark, tmp_path, job_stages):
+@pytest.mark.parametrize("kind", ["csv", "tiny_json"])
+def test_collector_pass_runs_only_the_bundle_write(spark, tmp_path, job_stages, kind):
     """An all-string CSV pass sizes its bundles from the header sample
-    the collector already reads: the write (which adaptive execution
-    runs as a shuffle-map job and a result job) and the audit append
-    are its only Spark jobs."""
+    the collector already reads, a tiny-JSON pass reads its stats off
+    the binaryFile listing, and both write the audit file from the
+    driver: the bundle write (which adaptive execution runs as a
+    shuffle-map job and a result job) is the only Spark work."""
     lake = tmp_path / "lake"
     lake.mkdir()
-    for f in range(8):
-        (lake / f"p{f}.csv").write_text(
-            "id,name\n" + "".join(f"{f * 100 + i},n{i}\n" for i in range(100))
-        )
+    if kind == "csv":
+        for f in range(8):
+            (lake / f"p{f}.csv").write_text(
+                "id,name\n" + "".join(f"{f * 100 + i},n{i}\n" for i in range(100))
+            )
+        file_type = FileType.CSV
+    else:
+        for f in range(200):
+            (lake / f"ev{f:03d}.json").write_text(json.dumps({"id": f, "note": "x" * 40}))
+        file_type = FileType.JSON
     for compress in (False, True):
         out = tmp_path / f"out{compress}"
         out.mkdir()
         sc = spark.sparkContext
-        group = f"csv-collector-{compress}"
-        sc.setJobGroup(group, "csv collector pass")
+        group = f"{kind}-collector-{compress}"
+        sc.setJobGroup(group, f"{kind} collector pass")
         try:
             bundles = LocalLakeCollector(
-                str(lake), file_type=FileType.CSV, csv_header=True,
+                str(lake), file_type=file_type, csv_header=kind == "csv",
                 filepath=str(out), filename="b", compress=compress,
             ).start()
         finally:
             sc._jsc.clearJobGroup()
         assert len(bundles) == 1
-        assert len(job_stages(group)) == 3
+        assert len(job_stages(group)) == 2
+        assert len(os.listdir(out / "_lakeflush_audit")) == 1

@@ -10,6 +10,7 @@ source tree.
 
 import gzip
 import os
+from dataclasses import replace
 
 import pytest
 
@@ -166,3 +167,88 @@ def test_s3_flusher_delivers_without_jvm_bridge(tmp_path, monkeypatch):
     )
     with pytest.raises(RuntimeError, match="no JVM filesystem bridge"):
         hdfs.flush(str(bundle))
+
+
+def test_opaque_stats_fallback_matches_file_index(spark, tmp_path, monkeypatch):
+    """The opaque path reads files and bytes off the binaryFile file
+    index; without the bridge it runs an aggregate over the same frame
+    instead. Both skip empty, hidden and non-matching files alike."""
+    import lakeflush_spark.operators.compaction as comp
+
+    lake = tmp_path / "lake"
+    (lake / "sub").mkdir(parents=True)
+    recs = ['{"k": %d}\n' % i * (i + 1) for i in range(6)]
+    for i, rec in enumerate(recs):
+        (lake / ("sub" if i % 2 else "") / f"f{i}.json").write_text(rec)
+    (lake / "empty.json").write_text("")
+    (lake / "_SUCCESS").write_text("x")
+    (lake / "notes.txt").write_text("not matched\n")
+    want = (len(recs), sum(len(r) for r in recs))
+    cfg = comp.CompactionConfig(
+        source_dir=str(lake), dest_dir=str(tmp_path / "a"), match_patterns=["*.json"]
+    )
+    raw = comp._opaque_binary_raw(spark, cfg)
+    assert comp._indexed_stats(raw) == want
+    assert tuple(raw.selectExpr("count(1)", "sum(length)").first()) == want
+    res = comp.compact(spark, cfg)
+    assert (res.source_files, res.source_bytes) == want
+    monkeypatch.setattr(comp, "hadoop_fs", lambda *_: None)
+    fb = comp.compact(spark, replace(cfg, dest_dir=str(tmp_path / "b")))
+    assert (fb.source_files, fb.source_bytes) == want
+    assert len(fb.bundles) == len(res.bundles)
+
+
+@pytest.mark.parametrize("route", ["bridge", "local", "spark"])
+def test_commit_parquet_routes_agree(spark, tmp_path, monkeypatch, route):
+    """``commit_parquet`` appends one file per call and ``replace=True``
+    leaves only the new one, whether the bridge resolves the path to
+    the local filesystem, or there is no bridge and it goes through
+    plain IO (local path) or a Spark write (remote path)."""
+    import pyarrow as pa
+
+    import lakeflush_spark.io as lio
+
+    if route != "bridge":
+        monkeypatch.setattr(lio, "hadoop_fs", lambda *_: None)
+    if route == "spark":
+        monkeypatch.setattr(lio, "local_path", lambda *_: None)
+    d = str(tmp_path / "t")
+    lio.commit_parquet(spark, d, pa.table({"a": [1, 2]}))
+    lio.commit_parquet(spark, d, pa.table({"a": [3]}))
+    assert sorted(r.a for r in spark.read.parquet(d).collect()) == [1, 2, 3]
+    lio.commit_parquet(spark, d, pa.table({"a": [9]}), replace=True)
+    assert [r.a for r in spark.read.parquet(d).collect()] == [9]
+    assert not [f for f in os.listdir(d) if f.endswith(".tmp")]
+
+
+def test_commit_parquet_scheme_less_path_follows_default_fs(spark, tmp_path):
+    """A scheme-less path belongs to ``fs.defaultFS``, as it does for
+    Spark's own writes, even when it also names a local directory. The
+    session's default FS here is a viewfs mount table that maps
+    ``<tmp>/mnt`` onto ``<tmp>/real``; the file must land under
+    ``real``, written through the Hadoop bridge, and nothing may
+    appear under ``mnt`` on local disk."""
+    import uuid
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import lakeflush_spark.io as lio
+
+    real, mnt = tmp_path / "real", tmp_path / "mnt"
+    real.mkdir()
+    # a copy of the session's conf, so the shared session is untouched
+    conf = spark._jvm.org.apache.hadoop.conf.Configuration(
+        spark._jsc.hadoopConfiguration()
+    )
+    table_name = "lf" + uuid.uuid4().hex[:8]
+    conf.set("fs.defaultFS", f"viewfs://{table_name}/")
+    conf.set(f"fs.viewfs.mounttable.{table_name}.link.{mnt}", f"file://{real}")
+    session = SimpleNamespace(
+        _jvm=spark._jvm, _jsc=SimpleNamespace(hadoopConfiguration=lambda: conf)
+    )
+    lio.commit_parquet(session, f"{mnt}/t", pa.table({"a": [1, 2]}))
+    lio.commit_parquet(session, f"{mnt}/t", pa.table({"a": [9]}), replace=True)
+    assert not mnt.exists()
+    assert pq.read_table(str(real / "t")).to_pydict() == {"a": [9]}

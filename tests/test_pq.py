@@ -234,3 +234,25 @@ def test_reencode_at_same_path_invalidates_codebook_cache(spark, tmp_path):
     )
     assert not np.array_equal(cb_a, cb_b)
     assert np.array_equal(cb_b, fresh)
+
+
+def test_trailing_slash_read_sees_reencoded_codebooks(spark, tmp_path):
+    """``read_codebooks`` and the re-encode invalidation must agree on
+    the cache key: a read via ``idx/`` after a delete and rebuild at
+    ``idx`` serves the NEW codebooks."""
+    import shutil
+
+    import numpy as np
+
+    idx_a = str(tmp_path / "ivf_a")
+    idx_b = str(tmp_path / "ivf_b")
+    pq = str(tmp_path / "pq")
+    build_ivf_index(_corpus(spark, n=300), idx_a, n_cells=4)
+    build_ivf_index(_corpus(spark, n=300, offset=5000), idx_b, n_cells=4)
+    pq_encode_index(spark, idx_a, pq, m=8, n_codes=16)
+    cb_a = read_codebooks(spark, pq + "/")
+    shutil.rmtree(pq)
+    pq_encode_index(spark, idx_b, pq, m=8, n_codes=16)
+    cb_b = read_codebooks(spark, pq + "/")
+    assert not np.array_equal(cb_a, cb_b)
+    assert np.array_equal(cb_b, read_codebooks(spark, pq))

@@ -508,6 +508,77 @@ def test_stream_compaction_lists_one_task_per_core(spark, tmp_path, job_stages):
     assert got == records
 
 
+def test_stream_compaction_batch_runs_stats_and_write_only(spark, tmp_path, job_stages):
+    """A micro-batch runs the stats aggregate and the bundle write (AQE
+    runs each as a shuffle-map job and a result job); its audit row is
+    written from the driver, not by a Spark job."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(8):
+        (src / f"f{i}.json").write_text(f'{{"f": {i}}}\n')
+    cfg = StreamCompactionConfig(
+        source_dir=str(src),
+        dest_dir=str(tmp_path / "dest"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        exactly_once=True,
+    )
+    q = compact_stream(spark, cfg, available_now=True)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 1
+    assert len(job_stages(str(q.runId))) == 4
+
+
+@pytest.mark.parametrize("exactly_once", [False, True])
+def test_stream_audit_reads_in_spark_and_pyarrow(spark, tmp_path, exactly_once):
+    """The driver-written stream audit reads the same in Spark and in
+    pyarrow, ``flushed_at`` is a UTC-adjusted timestamp in both, and a
+    crashed commit's hidden temp file is invisible to both readers."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakeflush_spark.streaming.compaction import _bundle_writer
+
+    dest = str(tmp_path / "dest")
+    cfg = StreamCompactionConfig(
+        source_dir=str(tmp_path / "unused"),
+        dest_dir=dest,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        exactly_once=exactly_once,
+    )
+    writer = _bundle_writer(cfg)
+    before = datetime.datetime.now(datetime.timezone.utc)
+    for batch_id, n in ((3, 5), (4, 2)):
+        writer(spark.range(n).selectExpr("CAST(id AS STRING) AS value"), batch_id)
+    after = datetime.datetime.now(datetime.timezone.utc)
+    audit = f"{dest}/_lakeflush_audit_stream"
+    # leftovers of a commit that crashed before its rename
+    leftover_dir = f"{audit}/batch_id=3" if exactly_once else audit
+    with open(f"{leftover_dir}/.part-00000-crashed-c000.snappy.parquet.tmp", "wb") as f:
+        f.write(b"not parquet")
+
+    df = spark.read.parquet(audit)
+    assert dict(df.dtypes)["flushed_at"] == "timestamp"
+    got = {r.batch_id: (r.records, r.bytes) for r in df.collect()}
+    assert got == {3: (5, 10), 4: (2, 4)}
+
+    t = pq.read_table(audit)
+    assert t.schema.field("flushed_at").type == pa.timestamp("us", tz="UTC")
+    assert {
+        int(b): (n, sz)
+        for b, n, sz in zip(t["batch_id"].to_pylist(), t["records"].to_pylist(),
+                            t["bytes"].to_pylist())
+    } == got
+    assert all(before <= ts <= after for ts in t["flushed_at"].to_pylist())
+    spark_ts = sorted(r.ts for r in df.selectExpr("unix_micros(flushed_at) AS ts").collect())
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    us = datetime.timedelta(microseconds=1)
+    arrow_ts = sorted((ts - epoch) // us for ts in t["flushed_at"].to_pylist())
+    assert spark_ts == arrow_ts
+
+
 def _stream_events(spark, sf_dir):
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from lakeflush_spark.io import table_path
